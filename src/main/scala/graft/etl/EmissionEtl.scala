@@ -197,8 +197,13 @@ class EmissionEtl(
       incoming, readTable("country"), Seq("country_name"), "left",
       broadcastRight = true)
       .select("city_name", "country_id")
+    // No country table yet means no logbook row has ever loaded
+    // (loadCountries runs first): read it as the reference's empty
+    // CREATE TABLE IF NOT EXISTS table, not as a missing path.
     val novel =
-      if (!tableExists("city")) withCountry
+      if (!tableExists("city"))
+        if (tableExists("country")) withCountry
+        else incoming.select(col("city_name"), lit(null).cast("int").as("country_id"))
       else if (strictCompat) {
         val countryIdType = readTable("country").schema("country_id").dataType
         antiJoinNew(incoming, readTable("city"), Seq("city_name"),
@@ -315,7 +320,10 @@ class EmissionEtl(
     n
   }
 
-  /** One scheduled run (X1/X2): dims then fact, all idempotent. */
+  /** One scheduled run (X1/X2): dims then fact, all idempotent. A run
+    * whose feeds are all absent loads nothing, also into a fresh
+    * warehouse (only `date` is created then).
+    */
   def run(driversCsv: String, carsCsv: String, logbookCsv: String): Map[String, Long] = {
     ensureDateDim()
     val drivers = readFeed(driversCsv, Schemas.driversFeed)

@@ -4,7 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Golden end-to-end on the reference's own CSVs (FIXTURES.md A5):
+/** Golden end-to-end on the reference's own CSVs (FIXTURES.md A5), or
+  * on generated feeds of the same shape when they are absent (A6):
   * warehouse row counts, null-safe join coverage, idempotence.
   */
 class EmissionEtlSpec extends SparkSpec {
@@ -12,10 +13,12 @@ class EmissionEtlSpec extends SparkSpec {
   private val refData = "/root/reference/data"
   private lazy val wh = Files.createTempDirectory("graft_wh").toString
   private lazy val etl = new EmissionEtl(spark, wh)
-  private lazy val firstRun = etl.run(
-    s"$refData/drivers_incoming_data/drivers.csv",
-    s"$refData/cars_incoming_data/vehicle_fuel_consumptions.csv",
-    s"$refData/logbook_incoming_data/drivers_logbook.csv")
+  private lazy val feeds = ReferenceFeeds.resolve(refData)
+  private def runOnFeeds(): Map[String, Long] = {
+    info(s"feeds: ${feeds.source}")
+    etl.run(feeds.drivers, feeds.cars, feeds.logbook)
+  }
+  private lazy val firstRun = runOnFeeds()
 
   test("first run loads golden row counts (1000/999/1/457/5000)") {
     assert(firstRun("drivers") == 1000L)
@@ -66,8 +69,7 @@ class EmissionEtlSpec extends SparkSpec {
 
   test("fact build plan is all-broadcast (no sort-merge, no extra shuffle)") {
     firstRun
-    val logbook = etl.readFeed(
-      s"$refData/logbook_incoming_data/drivers_logbook.csv", Schemas.logbookFeed)
+    val logbook = etl.readFeed(feeds.logbook, Schemas.logbookFeed)
     val plan = etl.buildFact(logbook).queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"), plan)
     assert("BroadcastHashJoin".r.findAllIn(plan).length >= 7, plan)
@@ -85,18 +87,24 @@ class EmissionEtlSpec extends SparkSpec {
   }
 
   test("second run appends nothing (idempotence via anti-joins)") {
-    firstRun
-    val second = etl.run(
-      s"$refData/drivers_incoming_data/drivers.csv",
-      s"$refData/cars_incoming_data/vehicle_fuel_consumptions.csv",
-      s"$refData/logbook_incoming_data/drivers_logbook.csv")
+    assert(firstRun("car_driver_log") > 0L)
+    val second = runOnFeeds()
     assert(second.values.forall(_ == 0L), s"second run appended: $second")
   }
 
   test("missing feed → empty frame with expected schema, run still succeeds") {
-    firstRun
+    assert(firstRun("car_driver_log") > 0L)
     val third = etl.run("/nonexistent/a.csv", "/nonexistent/b.csv", "/nonexistent/c.csv")
     assert(third.values.forall(_ == 0L))
+  }
+
+  test("first run with all three feeds absent loads nothing into a fresh warehouse") {
+    val fresh = new EmissionEtl(spark, Files.createTempDirectory("graft_wh_empty").toString)
+    val absent = Files.createTempDirectory("graft_no_feeds").toString
+    val counts = fresh.run(s"$absent/drivers.csv", s"$absent/cars.csv", s"$absent/logbook.csv")
+    assert(counts == Map("drivers" -> 0L, "cars" -> 0L, "country" -> 0L, "city" -> 0L,
+      "car_driver_log" -> 0L), counts)
+    assert(fresh.readTable("date").count() == 7306L)
   }
 
   test("emission rollups (the reference's headline analytics)") {

@@ -167,24 +167,31 @@ class FormatsSpec extends SparkSpec {
 
   test("EmissionEtl runs end-to-end on a JDBC (Derby) warehouse with golden counts") {
     val refData = "/root/reference/data"
+    val feeds = graft.etl.ReferenceFeeds.resolve(refData)
+    info(s"feeds: ${feeds.source}")
     val db = Files.createTempDirectory("graft_derby_etl").toString + "/wh"
     val feedDir = Files.createTempDirectory("graft_derby_feeds").toString
     val store = new JdbcStore(spark, s"jdbc:derby:$db;create=true")
     val etl = new graft.etl.EmissionEtl(spark, feedDir, storeOpt = Some(store))
-    val counts = etl.run(
-      s"$refData/drivers_incoming_data/drivers.csv",
-      s"$refData/cars_incoming_data/vehicle_fuel_consumptions.csv",
-      s"$refData/logbook_incoming_data/drivers_logbook.csv")
+    val counts = etl.run(feeds.drivers, feeds.cars, feeds.logbook)
     assert(counts("drivers") == 1000L, counts)
     assert(counts("cars") == 999L, counts)
     assert(counts("car_driver_log") == 5000L, counts)
     assert(etl.readTable("date").count() == 7306L)
     // idempotence holds on the JDBC backend too
-    val second = etl.run(
-      s"$refData/drivers_incoming_data/drivers.csv",
-      s"$refData/cars_incoming_data/vehicle_fuel_consumptions.csv",
-      s"$refData/logbook_incoming_data/drivers_logbook.csv")
+    val second = etl.run(feeds.drivers, feeds.cars, feeds.logbook)
     assert(second.values.forall(_ == 0L), second)
+  }
+
+  test("EmissionEtl with all three feeds absent loads nothing into a fresh JDBC (Derby) warehouse") {
+    val db = Files.createTempDirectory("graft_derby_empty").toString + "/wh"
+    val feedDir = Files.createTempDirectory("graft_derby_no_feeds").toString
+    val store = new JdbcStore(spark, s"jdbc:derby:$db;create=true")
+    val etl = new graft.etl.EmissionEtl(spark, feedDir, storeOpt = Some(store))
+    val counts = etl.run(s"$feedDir/drivers.csv", s"$feedDir/cars.csv", s"$feedDir/logbook.csv")
+    assert(counts == Map("drivers" -> 0L, "cars" -> 0L, "country" -> 0L, "city" -> 0L,
+      "car_driver_log" -> 0L), counts)
+    assert(etl.readTable("date").count() == 7306L)
   }
 
   test("ORC round trip preserves schema and values") {
