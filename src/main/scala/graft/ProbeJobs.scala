@@ -11,7 +11,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * attributable job by job across optimization rounds.
   *
   * args: optional probe-set filter (comma list of: repl, star,
-  * rollup, bm25, joinmv, changes). Default: all.
+  * rollup, bm25, joinmv, changes, scan). Default: all. Input tables
+  * come from `$SPARK_GRAFT_SF_DIR` (default: the sf0.01 test data);
+  * every table a run writes lives under one fresh temp directory,
+  * deleted when the run ends.
   */
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
@@ -44,20 +47,16 @@ object ProbeJobs {
       println(f"PHASE $label%-22s jobs=${jobs.get() - j0}%3d secs=${(System.nanoTime() - t0) / 1e9}%6.2f")
       r
     }
-    def wipe(paths: String*): Unit = {
-      val conf = spark.sparkContext.hadoopConfiguration
-      paths.foreach { p =>
-        val fp = new org.apache.hadoop.fs.Path(p)
-        fp.getFileSystem(conf).delete(fp, true)
-      }
-    }
+    // every table of the run lives under one fresh temp root, removed
+    // when the run ends
+    val root = java.nio.file.Files.createTempDirectory("probe_jobs").toString
+    def tmp(name: String): String = s"$root/$name"
     import org.apache.spark.sql.functions._
 
     if (sets("repl")) {
       val c = Tables.table(spark, sfDir, "customer")
         .select("c_custkey", "c_name", "c_acctbal")
-      val src = "/tmp/probe_repl_src"; val dst = "/tmp/probe_repl_dst"
-      wipe(src, dst)
+      val src = tmp("repl_src"); val dst = tmp("repl_dst")
       phase("seed_write") {
         c.repartition(1).write.parquet(src)
         graft.ops.TxLog.convert(spark, src)
@@ -100,8 +99,7 @@ object ProbeJobs {
       val o = Tables.table(spark, sfDir, "orders")
       val cst = Tables.table(spark, sfDir, "customer")
       val nat = Tables.table(spark, sfDir, "nation")
-      val db = "/tmp/probe_dbmv_star"
-      wipe(db)
+      val db = tmp("dbmv_star")
       graft.ops.DbLog.create(spark, db)
       graft.ops.DbLog.transact(spark, db, "seed") { txn =>
         txn.append("fact", o.select(col("o_orderkey"), col("o_custkey"),
@@ -159,8 +157,7 @@ object ProbeJobs {
 
     if (sets("rollup")) {
       val li = Tables.table(spark, sfDir, "lineitem")
-      val store = new graft.sources.ParquetStore(spark, "/tmp/probe_rollup")
-      wipe("/tmp/probe_rollup")
+      val store = new graft.sources.ParquetStore(spark, tmp("rollup"))
       val keys = Seq("l_partkey"); val ms = Seq("l_quantity")
       val dms = Seq("l_suppkey")
       val b1 = li.filter(pmod(col("l_orderkey"), lit(2)) === 0)
@@ -177,8 +174,7 @@ object ProbeJobs {
 
     if (sets("bm25")) {
       val docs = Tables.table(spark, sfDir, "documents")
-      val store = new graft.sources.ParquetStore(spark, "/tmp/probe_bm25")
-      wipe("/tmp/probe_bm25")
+      val store = new graft.sources.ParquetStore(spark, tmp("bm25"))
       phase("bm_create")(graft.text.Bm25Store.create(store, "bmq",
         docs.filter(col("doc_id") < 250),
         nBuckets = 16, nShards = 8, bloomIdsPerShard = 1L << 12))
@@ -190,8 +186,7 @@ object ProbeJobs {
     if (sets("joinmv")) {
       val o = Tables.table(spark, sfDir, "orders")
       val cst = Tables.table(spark, sfDir, "customer")
-      val fdir = "/tmp/probe_jmv_fact"; val ddir = "/tmp/probe_jmv_dim"
-      wipe(fdir, ddir, "/tmp/probe_jmv_store")
+      val fdir = tmp("jmv_fact"); val ddir = tmp("jmv_dim")
       o.select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice").as("price"))
         .repartition(4).write.parquet(fdir)
@@ -201,7 +196,7 @@ object ProbeJobs {
         col("c_mktsegment").as("seg"))
         .repartition(1).write.parquet(ddir)
       graft.ops.TxLog.convert(spark, ddir)
-      val store = new graft.sources.ParquetStore(spark, "/tmp/probe_jmv_store")
+      val store = new graft.sources.ParquetStore(spark, tmp("jmv_store"))
       phase("jm_seed")(graft.ops.JoinMv.follow(store, "rev", fdir, ddir,
         Seq("o_custkey"), Seq("seg"), Seq("price")))
       phase("jm_fact_write") {
@@ -227,8 +222,7 @@ object ProbeJobs {
     if (sets("changes")) {
       val c = Tables.table(spark, sfDir, "customer")
         .select("c_custkey", "c_name", "c_acctbal")
-      val dir = "/tmp/probe_changes"
-      wipe(dir)
+      val dir = tmp("changes")
       c.repartition(2).write.parquet(dir)
       graft.ops.TxLog.convert(spark, dir)
       phase("ch_commits") {
@@ -268,5 +262,8 @@ object ProbeJobs {
     }
 
     spark.stop()
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    rootPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .delete(rootPath, true)
   }
 }

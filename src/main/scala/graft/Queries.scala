@@ -5394,9 +5394,10 @@ object Queries {
     * ([[graft.ops.DbLog.alterColumnType]]): `li.l_quantity` seeds as
     * INT, renames to `qty` (column mapping freezes the physical
     * name), then widens INT→BIGINT — metadata-only, the sibling
-    * table `ord` keeps no pin at all. A post-widen MULTI-TABLE txn
-    * appends qty values beyond INT range to `li` and fresh keys to
-    * `ord` in one commit; a narrowing attempt must refuse; and the
+    * table `ord` keeps the pin its creating commit wrote. A
+    * post-widen MULTI-TABLE txn appends qty values beyond INT range
+    * to `li` and fresh keys to `ord` in one commit; a narrowing
+    * attempt must refuse; and the
     * pre-evolution AS OF cut must read the narrow type under its old
     * name at one consistent cross-table version. DuckDB replays the
     * final join with explicit CASTs; the AS OF cut rides along as
@@ -5423,8 +5424,9 @@ object Queries {
     require(scala.util.Try(graft.ops.DbLog.alterColumnType(
         s, p, "li", "qty", IntegerType)).isFailure,
       "dblog_widen: narrowing BIGINT -> INT must refuse")
-    require(graft.ops.DbLog.tableSchema(s, p, "ord").isEmpty,
-      "dblog_widen: the sibling table must stay unpinned (untouched)")
+    require(graft.ops.DbLog.tableSchema(s, p, "ord") ==
+        graft.ops.DbLog.tableSchema(s, p, "ord", vSeed),
+      "dblog_widen: the sibling table must keep its creation pin (untouched)")
     graft.ops.DbLog.transact(s, p, "post-widen") { txn =>
       txn.append("li", li0.filter(col("l_orderkey") < 200)
         .select((col("l_orderkey") + 90000000L).as("l_orderkey"),

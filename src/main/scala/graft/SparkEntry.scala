@@ -2446,7 +2446,7 @@ object Oracles {
 
     // per-table type widening in a DbLog database: li.l_quantity
     // seeds INT, renames to qty, widens to BIGINT (metadata-only,
-    // sibling ord unpinned); a post-widen multi-table txn appends
+    // sibling ord's pin untouched); a post-widen multi-table txn appends
     // beyond-INT qty values; the AS OF cut rides as scalars
     "q_dblog_widen" ->
       """WITH li AS (

@@ -237,9 +237,16 @@ class EmissionEtl(
     * chain is map-side joins over one scan.
     */
   def buildFact(logbook: DataFrame): DataFrame = {
-    val cars = readTable("cars")
+    // a dim whose feed has never arrived has no table yet: read it as
+    // the reference's empty CREATE TABLE IF NOT EXISTS table, so its
+    // ids load NULL as the reference's left merges give
+    def dim(name: String, schema: org.apache.spark.sql.types.StructType) =
+      if (tableExists(name)) readTable(name)
+      else spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    val cars = dim("cars", Schemas.carsTable)
       .select((Seq("car_id", "co2_emission_g_per_km") ++ Schemas.carNaturalKey).distinct.map(col): _*)
-    val drivers = readTable("drivers")
+    val drivers = dim("drivers", Schemas.driversTable)
     val dateDim = readTable("date").select("date_id", "date")
     val city = readTable("city").select("city_id", "city_name", "country_id")
     val country = readTable("country")

@@ -64,6 +64,22 @@ object Schemas {
     StructField("distance_km", DoubleType),
     StructField("date", StringType)))
 
+  /** Warehouse `drivers` table as [[EmissionEtl.loadDrivers]] writes it
+    * (dags/create_tables.py:22-28).
+    */
+  val driversTable: StructType = StructType(Seq(
+    StructField("driver_id", IntegerType),
+    StructField("name", StringType),
+    StructField("first_name", StringType)))
+
+  /** Warehouse `cars` table as [[EmissionEtl.loadCars]] writes it: the
+    * surrogate key, then the raw columns under their warehouse names
+    * and feed types (dags/create_tables.py:31-46).
+    */
+  val carsTable: StructType = StructType(
+    StructField("car_id", IntegerType) +:
+      carsFeedRaw.fields.toSeq.map(f => f.copy(name = carsRename(f.name))))
+
   /** The 6-col natural join key logbook↔cars (dags/emission-dag.py:158).
     * `cylinders`/`fuel_type` are nullable ⇒ joins must be null-safe.
     */

@@ -207,12 +207,11 @@ object ColumnMapping {
         "entries / per-table metadata) — the DIR-WIDE mapping would " +
         "claim every table's columns at once; rename per table with " +
         "DbLog.renameColumn(db, table, from, to) instead")
-    val current = TxLog.tableSchema(spark, dir).getOrElse {
-      val entries = TxLog.liveEntries(spark, dir)
-      require(entries.nonEmpty,
-        s"column mapping: $dir has no pinned schema and no files to infer one")
-      TxLog.readEntries(spark, dir, entries).schema
-    }
+    // a table holding data pinned its schema when it was created
+    val current = TxLog.tableSchema(spark, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"column mapping: $dir has no pinned schema (an empty table pins " +
+          "one through CREATE TABLE)"))
     if (isMapped(current)) return current
     val mapped = StructType(current.fields.map(f => withPhysical(f, f.name)))
     TxLog.setTableSchema(spark, dir, mapped)

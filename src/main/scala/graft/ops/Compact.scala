@@ -329,8 +329,8 @@ object Compact {
         ColumnMapping.toLogical(
           pinnedReader(spark, dir).parquet(paths: _*), sc)
       case None =>
-        // unpinned: memoized footer schema — the sampling job ran
-        // once for this exact immutable path set
+        // a directory without a log: memoized footer schema — the
+        // sampling job runs once per (immutable) probed file
         spark.read.schema(TxLog.inferSchemaCached(spark, paths))
           .parquet(paths: _*)
     }
@@ -395,7 +395,9 @@ object Compact {
       writeStage: String => Unit,
       prefix: Option[String] = None,
       allowDvOlds: Boolean = false,
-      op: Option[String] = None): Seq[String] = {
+      op: Option[String] = None,
+      frameSchema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Seq[String] = {
     if (!allowDvOlds) TxLog.requireNoDvs(spark, dir, olds, "rewrite")
     // the (name → dv) pairs this rewrite's reads are based on,
     // captured BEFORE writeStage scans a byte: a concurrent DV attach
@@ -435,7 +437,7 @@ object Compact {
       }
       fs.delete(stagePath, true)
       TxLog.commit(spark, dir, adds = newNames.map(sub + _), removes = olds,
-        seen = seen, op = op)
+        seen = seen, op = op, frameSchema = frameSchema)
       return newNames.map(sub + _)
     }
     require(prefix.isEmpty,
@@ -472,7 +474,9 @@ object Compact {
       olds: Seq[String],
       writeStage: String => Unit,
       allowDvOlds: Boolean = false,
-      op: Option[String] = None): Seq[String] = {
+      op: Option[String] = None,
+      frameSchema: Option[org.apache.spark.sql.types.StructType] = None)
+      : Seq[String] = {
     require(TxLog.exists(spark, dir),
       "hive-partitioned rewrites require a TxLog-managed directory")
     if (!allowDvOlds) TxLog.requireNoDvs(spark, dir, olds, "rewrite")
@@ -494,7 +498,7 @@ object Compact {
     }
     fs.delete(stagePath, true)
     TxLog.commit(spark, dir, adds = newNames, removes = olds, seen = seenH,
-      op = op)
+      op = op, frameSchema = frameSchema)
     newNames
   }
 

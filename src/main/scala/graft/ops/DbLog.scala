@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit, max, not}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, max, not}
 
 /** Multi-table ATOMIC transactions — the one lakehouse property a
   * per-table log cannot give (Delta has no multi-table commit;
@@ -69,8 +69,11 @@ object DbLog {
 
   private val TableName = "[A-Za-z_][A-Za-z0-9_]*".r
 
+  private[ops] def isTableName(t: String): Boolean =
+    TableName.pattern.matcher(t).matches()
+
   private def requireTableName(t: String): Unit =
-    require(TableName.pattern.matcher(t).matches(),
+    require(isTableName(t),
       s"DbLog table names must match [A-Za-z_][A-Za-z0-9_]* — got '$t' " +
         "('=' would hive-parse, '/' would nest)")
 
@@ -309,7 +312,7 @@ object DbLog {
       spark: SparkSession, db: String, table: String,
       from: String, to: String): Int = {
     requireTableName(table)
-    val pin = ColumnMapping.frozen(tablePinOrInfer(spark, db, table))
+    val pin = ColumnMapping.frozen(pinOf(spark, db, table))
     require(pin.fieldNames.contains(from),
       s"rename: no column $from in $db/$table")
     require(!pin.fieldNames.contains(to),
@@ -350,7 +353,7 @@ object DbLog {
     requireTableName(table)
     require(field.nullable, "add: new columns must be nullable " +
       "(pre-evolution rows read NULL)")
-    val pin = ColumnMapping.frozen(tablePinOrInfer(spark, db, table))
+    val pin = ColumnMapping.frozen(pinOf(spark, db, table))
     require(!pin.fieldNames.contains(field.name),
       s"add: ${field.name} already exists in $db/$table")
     val v = TxLog.commitEntries(spark, db, adds = Nil, removes = Nil,
@@ -372,7 +375,7 @@ object DbLog {
   def dropColumn(
       spark: SparkSession, db: String, table: String, name: String): Int = {
     requireTableName(table)
-    val pin = ColumnMapping.frozen(tablePinOrInfer(spark, db, table))
+    val pin = ColumnMapping.frozen(pinOf(spark, db, table))
     require(pin.fieldNames.contains(name), s"drop: no column $name in $db/$table")
     require(pin.fields.length > 1, "drop: cannot drop every column")
     val constrained = checkConstraints(spark, db, table)
@@ -415,7 +418,7 @@ object DbLog {
       spark: SparkSession, db: String, table: String,
       name: String, to: org.apache.spark.sql.types.DataType): Int = {
     requireTableName(table)
-    val pin = tablePinOrInfer(spark, db, table)
+    val pin = pinOf(spark, db, table)
     val f = pin.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"alter type: no column $name in $db/$table"))
@@ -429,14 +432,14 @@ object DbLog {
     v
   }
 
-  private def tablePinOrInfer(
+  /** The table's current pin — written by the commit that created it. */
+  private def pinOf(
       spark: SparkSession, db: String, table: String):
-      org.apache.spark.sql.types.StructType =
-    tableSchema(spark, db, table).getOrElse {
-      val es = entriesOf(spark, db, table, Int.MaxValue)
-      require(es.nonEmpty, s"no such table '$table' in $db")
-      TxLog.readEntries(spark, db, es).schema
-    }
+      org.apache.spark.sql.types.StructType = {
+    val pin = tableSchema(spark, db, table)
+    require(pin.isDefined, s"no such table '$table' in $db")
+    pin.get
+  }
 
   /** Every physical and logical name any retained pin of this TABLE
     * ever used — the collision set a fresh physical name must avoid.
@@ -771,6 +774,10 @@ object DbLog {
     private val removes = Seq.newBuilder[String]
     private val seen = Seq.newBuilder[TxLog.AddEntry]
     private val cdcs = Seq.newBuilder[String]
+    // per table, the columns of every frame this transaction staged:
+    // they pin a table the commit creates and widen an existing pin
+    private val frames = scala.collection.mutable.LinkedHashMap
+      .empty[String, org.apache.spark.sql.types.StructType]
     private var done = false
     // a second rewrite of the same table would re-apply against the
     // BASE version and double the first rewrite's replacements — the
@@ -816,6 +823,14 @@ object DbLog {
     private def stageIn(table: String, write: String => Unit): Seq[String] =
       DbLog.stageInto(spark, db, table, write)
 
+    private def noteFrame(
+        table: String, sc: org.apache.spark.sql.types.StructType): Unit = {
+      val prev = frames.getOrElse(table, new org.apache.spark.sql.types.StructType())
+      val have = prev.fieldNames.map(_.toLowerCase).toSet
+      frames(table) = org.apache.spark.sql.types.StructType(
+        prev.fields ++ sc.fields.filterNot(f => have(f.name.toLowerCase)))
+    }
+
     /** Stage an append of `df` into `table` (created on first
       * append). Append-only staging never conflicts with concurrent
       * transactions — it removes nothing.
@@ -827,6 +842,7 @@ object DbLog {
       val rels = stageIn(table,
         p => toPhys(table, df).write.mode("overwrite").parquet(p))
       adds ++= rels.map(TxLog.AddEntry(_))
+      noteFrame(table, df.schema)
     }
 
     /** Stage a full replacement of `table`'s contents. */
@@ -842,6 +858,7 @@ object DbLog {
       adds ++= rels.map(TxLog.AddEntry(_))
       removes ++= olds.map(_.name)
       seen ++= olds
+      noteFrame(table, df.schema)
     }
 
     /** Stage a copy-on-write delete: ONE pushdown scan over the
@@ -967,13 +984,17 @@ object DbLog {
         // NULL dim attributes) — SQL's null-never-equals semi join
         // would leave the old null-keyed row unhidden, duplicating it
         // on every application. <=> matches it; plain keyed upserts
-        // keep SQL semantics (a NULL merge key pairs nothing).
+        // keep SQL semantics (a NULL merge key pairs nothing). A
+        // state-maintenance key set is one row per changed group, so
+        // it is broadcast: planned adaptively, the semi join's stages
+        // (and its job count) depended on whether the key aggregate
+        // or the table read's deletion-vector broadcast finished first.
         val st = DeletionVectors.stageDelete(spark, db, entries,
           df => {
             val rows = toLogical(table, df)
             if (!nullSafeKeys) rows.join(k, keyCols, "left_semi")
             else {
-              val ka = k.toDF(keyCols.map(c => s"__k_$c"): _*)
+              val ka = broadcast(k.toDF(keyCols.map(c => s"__k_$c"): _*))
               rows.join(ka, keyCols.map(c =>
                 rows(c) <=> ka(s"__k_$c")).reduce(_ && _), "left_semi")
             }
@@ -1015,6 +1036,7 @@ object DbLog {
       val rels = stageIn(table,
         p => toPhys(table, toWrite).write.mode("overwrite").parquet(p))
       adds ++= rels.map(TxLog.AddEntry(_))
+      noteFrame(table, aligned.schema)
     }
 
     /** Stage a keyed MERGE: rows of `updates` replace same-key rows
@@ -1068,7 +1090,8 @@ object DbLog {
       done = true
       TxLog.commitEntries(spark, db,
         adds = adds.result(), removes = removes.result(), txn = txn,
-        seen = seen.result(), op = Some(op), cdc = cdcs.result())
+        seen = seen.result(), op = Some(op), cdc = cdcs.result(),
+        frameSchemas = frames.map { case (t, sc) => Some(t) -> sc }.toMap)
     }
   }
 }

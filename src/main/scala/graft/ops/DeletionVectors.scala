@@ -236,10 +236,9 @@ object DeletionVectors {
     // NULL under the pin).
     var evolvedTo: Option[org.apache.spark.sql.types.StructType] = None
     val updatesAligned = {
-      val base = TxLog.tableSchema(spark, dir).getOrElse {
-        if (entries.isEmpty) updates.schema
-        else TxLog.readEntries(spark, dir, entries).schema
-      }
+      // a table holding data pinned its schema when it was created;
+      // an empty one takes the batch's width
+      val base = TxLog.tableSchema(spark, dir).getOrElse(updates.schema)
       val baseNames = base.fieldNames.toSet
       val batchNames = updates.columns.toSet
       val fresh = updates.schema.fields.filterNot(f => baseNames(f.name))

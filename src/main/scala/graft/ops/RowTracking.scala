@@ -105,14 +105,11 @@ object RowTracking {
       s"row tracking: $db is not a DbLog database")
     if (enabledTable(spark, db, table)) return
     val live = DbLog.entriesOf(spark, db, table, Int.MaxValue)
-    if (DbLog.tableSchema(spark, db, table).isEmpty) {
-      require(live.nonEmpty,
-        s"row tracking: $db/$table is empty and unpinned — pin a " +
-          "schema first (DbLog.setTableSchema, or append data before " +
-          "enabling)")
-      DbLog.setTableSchema(spark, db, table,
-        DbLog.snapshot(spark, db, table).schema)
-    }
+    // a table holding data pinned its schema when it was created
+    require(DbLog.tableSchema(spark, db, table).isDefined,
+      s"row tracking: $db/$table is empty and unpinned — pin a " +
+        "schema first (DbLog.setTableSchema, or append data before " +
+        "enabling)")
     TxLog.metaWrite(spark, db, tableFlagName(table), "on")
     val need = live.filter(_.rowBase.isEmpty)
     if (need.nonEmpty) {
@@ -144,13 +141,10 @@ object RowTracking {
       s"row tracking: $dir is not TxLog-managed")
     if (enabled(spark, dir)) return
     val live = TxLog.liveEntries(spark, dir)
-    if (TxLog.tableSchema(spark, dir).isEmpty) {
-      require(live.nonEmpty,
-        s"row tracking: $dir is empty and unpinned — pin a schema " +
-          "first (CREATE TABLE, or append data before enabling)")
-      TxLog.setTableSchema(spark, dir, TxLog.snapshot(spark, dir).schema,
-        TxLog.currentVersion(spark, dir))
-    }
+    // a table holding data pinned its schema when it was created
+    require(TxLog.tableSchema(spark, dir).isDefined,
+      s"row tracking: $dir is empty and unpinned — pin a schema " +
+        "first (CREATE TABLE, or append data before enabling)")
     TxLog.metaWrite(spark, dir, FlagName, "on")
     val need = live.filter(_.rowBase.isEmpty)
     if (need.nonEmpty) {

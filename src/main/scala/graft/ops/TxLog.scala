@@ -893,17 +893,10 @@ object TxLog {
         Compact.dataFilesRecursive(fs, dir)
       }
     fs.mkdirs(logPath(dir))
-    // a convert is a table (re)birth — the one seam that bypasses
-    // [[commitEntries]] (recreate heals delete the dir whole and
-    // convert fresh files under the SAME prefixes): drop every
-    // prefix-schema memo of this dir or a reborn table would read
-    // under its predecessor's inferred schema
-    prefixSchemas.synchronized {
-      val it = prefixSchemas.keySet.iterator
-      while (it.hasNext) if (it.next().startsWith(dir + "\n")) it.remove()
-    }
     writeVersion(spark, dir, 0, files.map(AddEntry(_)), Nil,
       op = Some("convert"))
+    // a convert that finds files creates the table: pin its schema
+    pinAfterCommit(spark, dir, 0, files.map(AddEntry(_)), Map.empty)
     0
   }
 
@@ -982,13 +975,16 @@ object TxLog {
     val pcols = if (declared.nonEmpty) declared
       else graft.ops.DeleteWhere.partitionColsOf(liveFiles(spark, dir))
     val phys = stagePhysical(spark, dir, df)
+    // the batch's own schema pins a table this append creates, and
+    // widens the pin when the batch brings new columns
     if (pcols.nonEmpty)
       Compact.stageRewriteHive(spark, dir, olds = Nil, writeStage = p =>
         phys.write.partitionBy(pcols: _*).mode("overwrite").parquet(p),
-        op = Some("insert"))
+        op = Some("insert"), frameSchema = Some(df.schema))
     else
       Compact.stageRewrite(spark, dir, olds = Nil, writeStage = p =>
-        phys.write.mode("overwrite").parquet(p), op = Some("insert"))
+        phys.write.mode("overwrite").parquet(p), op = Some("insert"),
+        frameSchema = Some(df.schema))
     currentVersion(spark, dir)
   }
 
@@ -1130,16 +1126,15 @@ object TxLog {
 
   /** Snapshot read: exactly the files version `version` (default
     * current) references — immune to concurrent commits and to the
-    * superseded files still on disk. `mergeSchema` unions the schemas
-    * across the snapshot's files (absent columns read NULL), so an
-    * appended stream can EVOLVE its schema and every version still
-    * reads — at the price of one footer read per file at planning.
+    * superseded files still on disk. The schema is the log's pin in
+    * effect at the version: files lacking a pinned column read NULL,
+    * so an appended stream whose batches widen the pin reads every
+    * version at its own width.
     */
   def snapshot(
       spark: SparkSession,
       dir: String,
       version: Int = Int.MaxValue,
-      mergeSchema: Boolean = false,
       schemaVersion: Int = -1): DataFrame = {
     // data at `version`, names/width at `schemaVersion` when a caller
     // needs a historical cut under a LATER pin (the streaming source's
@@ -1156,7 +1151,7 @@ object TxLog {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pin.get)
     }
-    readEntries(spark, dir, entries, mergeSchema, schemaVersion = schemaV)
+    readEntries(spark, dir, entries, schemaVersion = schemaV)
   }
 
   private def schemaFileName(v: Int) = f"s$v%08d.json"
@@ -1227,8 +1222,9 @@ object TxLog {
   }
 
   /** The pinned schema in effect at `version` (newest pin ≤ version);
-    * None when the table never pinned one (footers decide, the
-    * pre-evolution behavior).
+    * None before the table held data (the commit that creates a table
+    * pins it — [[pinAfterCommit]]), or for a log written before that
+    * rule (footers decide).
     */
   def tableSchema(
       spark: SparkSession,
@@ -1313,17 +1309,21 @@ object TxLog {
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType)))
 
-  /** Footer-schema memo for UNPINNED explicit-path reads. Every
+  /** Footer-schema memo for explicit-path reads of directories with NO
+    * log — a log-managed table resolves its schema from the pin it
+    * wrote when it was created, never from a footer. Every
     * `spark.read.parquet(paths…)` without a user schema runs a footer-
-    * sampling Spark JOB at plan time; a keyed commit paid four of
-    * them per advance (candidate read, table-schema probe, sidecar
-    * reads). Parquet files here are immutable and never rewritten in
-    * place (staged writes land FRESH uuid names; rewrites commit new
-    * entries), so the inferred schema of an exact path set is a pure
-    * function of the paths — memoized, the job runs once per set.
-    * Schemas only (bytes-tiny), bounded LRU, keyed by (basePath,
-    * mergeSchema, sorted paths). NOT result caching: every read still
-    * scans the files; only plan-time schema discovery is reused.
+    * sampling Spark JOB at plan time; memoized, the job runs once per
+    * file. Non-merge inference reads ONE footer (Spark's fast path
+    * converts a single data file's schema), so the memo keys on the
+    * set's MIN path, plus that file's length and modification time: a
+    * file rewritten in place under the same name re-infers instead of
+    * serving the old schema. Hive-partitioned sets (any `=` past the
+    * base) read the full set unmemoized — partition-column TYPES are
+    * inferred across ALL directory values, which one file cannot
+    * reproduce. Schemas only (bytes-tiny), bounded LRU. NOT result
+    * caching: every read still scans the files; only plan-time schema
+    * discovery is reused.
     */
   private val inferredSchemas =
     new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
@@ -1335,126 +1335,22 @@ object TxLog {
   private[ops] def inferSchemaCached(
       spark: SparkSession,
       paths: Seq[String],
-      basePath: Option[String] = None,
-      mergeSchema: Boolean = false): org.apache.spark.sql.types.StructType = {
-    // NON-MERGE inference reads ONE footer (Spark's fast path converts
-    // a single data file's schema, whichever the listing surfaces
-    // first), so the result is a single-FILE property, not a set
-    // property — and an exact-set memo can never hit on the FRESH set
-    // every commit produces (staged writes land new uuid names). Key
-    // the non-merge path on the set's MIN path instead and infer from
-    // that one file: a steady-state advance whose fresh set still
-    // contains the (immutable) min file resolves its schema with ZERO
-    // jobs. Guard: hive-partitioned sets (any `=` past the base) keep
-    // the full-set read — partition-column TYPES are inferred across
-    // ALL directory values, which one file cannot reproduce.
+      basePath: Option[String] = None): org.apache.spark.sql.types.StructType = {
+    val reader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
     val flat = !paths.exists(p =>
       basePath.fold(p)(b => p.stripPrefix(b)).contains("="))
-    if (!mergeSchema && flat && paths.nonEmpty) {
-      val minPath = paths.min
-      val key = basePath.getOrElse("") + "\nfile\n" + minPath
-      inferredSchemas.synchronized {
-        val got = inferredSchemas.get(key)
-        if (got != null) return got
-      }
-      val sc = basePath.fold(spark.read)(b =>
-        spark.read.option("basePath", b)).parquet(minPath).schema
-      inferredSchemas.synchronized { inferredSchemas.put(key, sc) }
-      return sc
-    }
-    // merge=true: the key DIGESTS the sorted path list (plus count and
-    // total length) instead of retaining it — a 100 TB table's
-    // candidate set is 10^5-10^6 paths, and holding full path lists as
-    // LRU keys would pin tens of MB of driver heap per entry (guide
-    // §5). The schema values are tiny; 128 bits of digest + the two
-    // length fields keep the collision odds negligible, and a
-    // collision would need two SAME-LENGTH, SAME-COUNT path sets
-    // anyway.
-    val md = java.security.MessageDigest.getInstance("MD5")
-    var totalLen = 0L
-    paths.sorted.foreach { p =>
-      md.update(p.getBytes(StandardCharsets.UTF_8)); md.update('\n'.toByte)
-      totalLen += p.length
-    }
-    val key = basePath.getOrElse("") + "\n" + mergeSchema + "\n" +
-      paths.length + "\n" + totalLen + "\n" +
-      java.util.Base64.getEncoder.encodeToString(md.digest())
+    if (!flat || paths.isEmpty) return reader.parquet(paths: _*).schema
+    val minPath = paths.min
+    val st = Compact.fsOf(spark, minPath).getFileStatus(new Path(minPath))
+    val key = basePath.getOrElse("") + "\n" + minPath + "\n" + st.getLen +
+      "\n" + st.getModificationTime
     inferredSchemas.synchronized {
       val got = inferredSchemas.get(key)
       if (got != null) return got
     }
-    val r0 = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
-    val sc = (if (mergeSchema) r0.option("mergeSchema", "true") else r0)
-      .parquet(paths: _*).schema
+    val sc = reader.parquet(minPath).schema
     inferredSchemas.synchronized { inferredSchemas.put(key, sc) }
     sc
-  }
-
-  /** One inferred read schema per (dir, table prefix) for UNPINNED
-    * tables — the SUBSET-read seam the path-keyed memo above cannot
-    * serve: a keyed advance reads several FRESH-file subsets of one
-    * table (candidate semi-join reads, positional DV-delta reads,
-    * change-data coverage), and every such subset's paths are
-    * first-seen by construction, so a set- or file-keyed memo always
-    * misses. The schema is a TABLE property here, not a set property:
-    * every schema-CHANGING op pins (add/drop/rename/widen and
-    * row-tracking enable all call setTableSchema), so an unpinned
-    * table's files are same-schema by the write discipline — one
-    * inference per (dir, prefix) serves every subset. Any commit
-    * touching the prefix INVALIDATES the entry
-    * ([[invalidatePrefixSchemas]] inside [[commitEntries]]), so even
-    * out-of-band unpinned drift is re-read at the next commit
-    * boundary. Hive-partitioned names (`k=v/`) skip the memo:
-    * partition-column TYPES are inferred across ALL directory values,
-    * which one probe cannot reproduce.
-    */
-  private val prefixSchemas =
-    new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.sql.types.StructType])
-          : Boolean = size > 512
-    }
-  private def prefixOf(name: String): Option[String] =
-    if (name.contains('=')) None
-    else {
-      val i = name.indexOf('/')
-      Some(if (i > 0) name.substring(0, i) else "")
-    }
-  private[ops] def prefixSchemaCached(
-      spark: SparkSession,
-      dir: String,
-      entries: Seq[AddEntry]): Option[org.apache.spark.sql.types.StructType] = {
-    if (entries.isEmpty) return None
-    val pfx = prefixOf(entries.head.name)
-    if (pfx.isEmpty || entries.exists(e => prefixOf(e.name) != pfx))
-      return None // mixed tables or hive layout: no single read schema
-    val key = dir + "\n" + pfx.get
-    prefixSchemas.synchronized {
-      val got = prefixSchemas.get(key)
-      if (got != null) return Some(got)
-    }
-    // STRIP field metadata: parquet footers round-trip Spark field
-    // metadata, so files written from a MAPPED source's aliased frame
-    // carry that source's `physical name` annotations — serving them
-    // as a pin would route THIS table's read through the foreign
-    // mapping (physicalSchema/toLogical renames). The unpinned read
-    // this memo stands in for never applied mapping; neither may its
-    // stand-in.
-    val sc = org.apache.spark.sql.types.StructType(
-      inferSchemaCached(spark, entries.map(e => dataPathOf(dir, e)))
-        .fields.map(_.copy(
-          metadata = org.apache.spark.sql.types.Metadata.empty)))
-    prefixSchemas.synchronized { prefixSchemas.put(key, sc) }
-    Some(sc)
-  }
-  private def invalidatePrefixSchemas(
-      dir: String, names: Iterable[String]): Unit = {
-    val pfxs = names.flatMap(prefixOf(_)).toSet
-    if (pfxs.isEmpty) return
-    prefixSchemas.synchronized {
-      pfxs.foreach(p => prefixSchemas.remove(dir + "\n" + p))
-    }
   }
 
   /** Read exactly `entries`, applying each entry's deletion vector —
@@ -1486,7 +1382,6 @@ object TxLog {
       spark: SparkSession,
       dir: String,
       entries: Seq[AddEntry],
-      mergeSchema: Boolean = false,
       withPos: Boolean = false,
       schemaVersion: Int = Int.MaxValue,
       pinOverride: Option[org.apache.spark.sql.types.StructType] = None,
@@ -1499,29 +1394,16 @@ object TxLog {
     // lookup. Resolved ONCE: the scan below reads the pin's PHYSICAL
     // names (what the files spell under column mapping — identical to
     // the logical names when unmapped), and the return aliases back.
-    // Unpinned non-merge reads fall back to the per-(dir, prefix)
-    // inferred schema ([[prefixSchemaCached]]) so fresh-file SUBSET
-    // reads stop paying a footer-inference job each.
+    // Every table that holds data pinned its schema when it was
+    // created ([[pinAfterCommit]]); only a log written before that
+    // rule leaves the footers to decide.
     val pin = pinOverride.orElse(tableSchema(spark, dir, schemaVersion))
-      .orElse(if (mergeSchema) None
-        else prefixSchemaCached(spark, dir, entries))
     // basePath keeps hive-partition columns alive when reading an
-    // explicit file list out of a partitioned layout; no-op when flat
-    def rd(root: String) = {
+    // explicit file list out of a partitioned layout; no-op when flat.
+    // The log says what the table is: files lacking a column read NULL
+    def rdPaths(root: String, paths: Seq[String]): DataFrame = {
       val r = spark.read.option("basePath", root)
-      // a pinned schema beats footer sampling AND mergeSchema: the
-      // log says what the table is, files lacking a column read NULL.
-      pin match {
-        case Some(sc) => r.schema(ColumnMapping.physicalSchema(sc))
-        case None => if (mergeSchema) r.option("mergeSchema", "true") else r
-      }
-    }
-    // unpinned: resolve the footer schema ONCE through the memo so the
-    // plan-time sampling job doesn't re-run per action on the same set
-    def rdPaths(root: String, paths: Seq[String]): DataFrame = pin match {
-      case Some(_) => rd(root).parquet(paths: _*)
-      case None => spark.read.option("basePath", root)
-        .schema(inferSchemaCached(spark, paths, Some(root), mergeSchema))
+      pin.fold(r)(sc => r.schema(ColumnMapping.physicalSchema(sc)))
         .parquet(paths: _*)
     }
     def readGroup(root: String, ge: Seq[AddEntry]): DataFrame = {
@@ -1745,6 +1627,92 @@ object TxLog {
     src.filter(col(column) >= lo && col(column) <= hi)
   }
 
+  /** The table an entry name belongs to, for its schema pin: `Some(t)`
+    * for a DbLog table's `t/…` files, None for the directory's own
+    * table (root-level or hive `k=v/…` names).
+    */
+  private[ops] def pinScopeOf(name: String): Option[String] = {
+    val i = name.indexOf('/')
+    if (i > 0 && DbLog.isTableName(name.substring(0, i)))
+      Some(name.substring(0, i))
+    else None
+  }
+
+  /** Keep the schema rule: every table holding data has a pin in its
+    * log, written by the commit that created it. After a commit lands
+    * at `v`, per pin scope its `adds` touch: an unpinned table is
+    * pinned from the staged frame (flat tables) or from ONE footer
+    * inference over the added files; a pinned, unmapped table widens
+    * by the frame's new columns (a mapped one evolves through DDL). A
+    * pin matches the plain read: fields nullable, metadata stripped
+    * (footers written from a MAPPED source carry its `physical name`
+    * annotations), hive partition columns last with inferred types.
+    */
+  private def pinAfterCommit(
+      spark: SparkSession,
+      dir: String,
+      v: Int,
+      adds: Seq[AddEntry],
+      frames: Map[Option[String], org.apache.spark.sql.types.StructType])
+      : Unit =
+    adds.groupBy(e => pinScopeOf(e.name)).foreach { case (scope, es) =>
+      val pin = scope.fold(tableSchema(spark, dir))(DbLog.tableSchema(spark, dir, _))
+      val frame = frames.get(scope).map(pinnable)
+      val next = pin match {
+        case None =>
+          // a nested (hive) layout types its partition columns from the
+          // directory values, which the frame does not carry
+          val nested = es.exists(e =>
+            e.name.stripPrefix(scope.fold("")(_ + "/")).contains('/'))
+          frame.filterNot(_ => nested).orElse(inferPin(spark, dir, es, nested))
+        case Some(p) if !ColumnMapping.isMapped(p) =>
+          val have = p.fieldNames.map(_.toLowerCase).toSet
+          val fresh = frame.toSeq.flatMap(_.fields).filterNot(f =>
+            have(f.name.toLowerCase) || f.name.startsWith("__graft_"))
+          if (fresh.isEmpty) None
+          else Some(org.apache.spark.sql.types.StructType(p.fields ++ fresh))
+        case Some(_) => None
+      }
+      next.foreach(sc => scope match {
+        case None    => setTableSchema(spark, dir, sc, v)
+        case Some(t) => DbLog.setTableSchema(spark, dir, t, sc, v)
+      })
+    }
+
+  private def pinnable(sc: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def nullable(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), true)
+      case other => other
+    }
+    StructType(sc.fields.map(f => f.copy(dataType = nullable(f.dataType),
+      nullable = true, metadata = Metadata.empty)))
+  }
+
+  /** The pin of a table created by files alone: the schema the plain
+    * read of `es` resolves — one footer (the MIN path's) for a flat
+    * table, the full set for a nested one (partition-column types are
+    * inferred across every directory value). None when the probed
+    * files are absent (a commit may name files that land later).
+    */
+  private def inferPin(
+      spark: SparkSession, dir: String, es: Seq[AddEntry], nested: Boolean)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val root = dataRootOf(dir, es.head)
+    val fs = Compact.fsOf(spark, dir)
+    val paths = es.filter(dataRootOf(dir, _) == root)
+      .map(e => dataPathOf(dir, e)).filter(p => fs.exists(new Path(p)))
+    if (paths.isEmpty) return None
+    val probe = if (nested) paths else Seq(paths.min)
+    Some(pinnable(spark.read.option("basePath", root)
+      .parquet(probe: _*).schema))
+  }
+
   /** Append a commit (called by the file-surgery operators after their
     * staged files are in place). Optimistic: claims `current + 1`,
     * retrying past a racing committer — and on every (re)attempt
@@ -1763,13 +1731,18 @@ object TxLog {
       removes: Seq[String],
       txn: Option[String] = None,
       seen: Seq[AddEntry] = Nil,
-      op: Option[String] = None): Int =
-    commitEntries(spark, dir, adds.map(AddEntry(_)), removes, txn, seen, op)
+      op: Option[String] = None,
+      frameSchema: Option[org.apache.spark.sql.types.StructType] = None): Int =
+    commitEntries(spark, dir, adds.map(AddEntry(_)), removes, txn, seen, op,
+      frameSchemas = frameSchema.map(None -> _).toMap)
 
   /** [[commit]] with pre-built entries — the path DV attachment uses
     * (a re-ADD carrying its existing stats plus the new sidecar name,
     * with the file itself in `removes` so the conflict check still
-    * rejects a concurrent rewrite of the same file).
+    * rejects a concurrent rewrite of the same file). `frameSchemas`:
+    * the schema of the frame a writer staged, per pin scope
+    * ([[pinScopeOf]]) — it pins a table this commit creates without a
+    * footer read, and widens an existing pin by its new columns.
     */
   private[graft] def commitEntries(
       spark: SparkSession,
@@ -1779,7 +1752,9 @@ object TxLog {
       txn: Option[String] = None,
       seen: Seq[AddEntry] = Nil,
       op: Option[String] = None,
-      cdc: Seq[String] = Nil): Int = {
+      cdc: Seq[String] = Nil,
+      frameSchemas: Map[Option[String], org.apache.spark.sql.types.StructType] =
+        Map.empty): Int = {
     // when the table declares stats columns, footer-read the added
     // files ONCE (outside the retry loop — stats don't change across
     // attempts) and embed their bounds in the ADD entries. Lenient:
@@ -1806,13 +1781,7 @@ object TxLog {
           val i = n.indexOf('/')
           if (i > 0) perTable.getOrElse(n.substring(0, i), cols) else cols
         }
-        def tableOf(n: String): Option[String] = {
-          val i = n.indexOf('/')
-          if (i > 0 && !n.substring(0, i).contains('='))
-            Some(n.substring(0, i))
-          else None
-        }
-        val groups = bare.groupBy(n => (colsFor(n), tableOf(n)))
+        val groups = bare.groupBy(n => (colsFor(n), pinScopeOf(n)))
           .filter(_._1._1.nonEmpty)
         if (groups.isEmpty) adds
         else {
@@ -1883,9 +1852,7 @@ object TxLog {
         committed = parent + 1
       // lost the race: loop re-reads the parent and re-validates
     }
-    // the committed files may have changed what an unpinned read of
-    // the touched tables infers — drop those prefixes' schema memos
-    invalidatePrefixSchemas(dir, adds.map(_.name) ++ removes)
+    pinAfterCommit(spark, dir, committed, adds, frameSchemas)
     // auto-checkpoint policy ([[setCheckpointEvery]]): every N-th
     // main commit folds the log in-line. Branch commits skip (their
     // folds ride the base's checkpoints); a racing writer may have
@@ -2233,15 +2200,11 @@ object TxLog {
         // the `__graft_file` column (sibling tables' sidecars carry
         // same-named columns with DIFFERENT physical types:
         // unreadable in one scan, never joinable anyway)
-        // same pin fallback as [[readEntries]]: an unpinned table's
-        // sidecar read resolves its explicit schema from the table's
-        // per-prefix inferred one instead of a merge-inference job
-        // over the range's FRESH sidecar files (which no memo can
-        // serve). Row-tracked tables always carry a real pin (enable
-        // pins one), so the withRowIds gate below is unaffected.
+        // the sidecar read takes its explicit schema from the table's
+        // pin; a log written before tables pinned at creation serves
+        // every hidden position from the raw positional read instead
         val pin = pinOverride.orElse(tableSchema(spark, dir, schemaVersion))
-          .orElse(prefixSchemaCached(spark, dir, dvPairs.map(_._2)))
-        val cdcOk = cdcNames.nonEmpty && !(withRowIds && pin.isEmpty)
+        val cdcOk = cdcNames.nonEmpty && pin.isDefined
         val paths: Seq[String] =
           if (!cdcOk) Nil
           else {
@@ -2283,25 +2246,18 @@ object TxLog {
             if (cnt.getLong(0) == 0) None else Some(h),
             if (cnt.getLong(1) == 0) None else Some(r))
         } else {
-          val raw = pin match {
-            case Some(sc) =>
-              // the pin's PHYSICAL names + the sidecar plumbing
-              // columns: a sidecar written before a column ADD reads
-              // NULL there, a foreign table's sidecar columns are
-              // ignored — the data-file contract exactly
-              val phys = ColumnMapping.physicalSchema(sc)
-              val extras = Seq(
-                StructField("__graft_file", StringType),
-                StructField("__graft_pos", LongType),
-                StructField("__graft_rid", LongType))
-                .filterNot(f => phys.fieldNames.contains(f.name))
-              spark.read.schema(StructType(phys.fields ++ extras))
-                .parquet(paths: _*)
-            case None =>
-              spark.read
-                .schema(inferSchemaCached(spark, paths, mergeSchema = true))
-                .parquet(paths: _*)
-          }
+          // the pin's PHYSICAL names + the sidecar plumbing columns: a
+          // sidecar written before a column ADD reads NULL there, a
+          // foreign table's sidecar columns are ignored — the
+          // data-file contract exactly
+          val phys = ColumnMapping.physicalSchema(pin.get)
+          val extras = Seq(
+            StructField("__graft_file", StringType),
+            StructField("__graft_pos", LongType),
+            StructField("__graft_rid", LongType))
+            .filterNot(f => phys.fieldNames.contains(f.name))
+          val raw = spark.read.schema(StructType(phys.fields ++ extras))
+            .parquet(paths: _*)
           // a restore + re-delete can record one position twice across
           // the range; content is identical (a (file, pos) names fixed
           // bytes) — the dedup makes the left join 1:1, so the fused

@@ -62,7 +62,7 @@ object TxLogIngest {
         }
         fs.delete(stage, true)
         TxLog.commit(spark, dir, adds = names, removes = Nil, txn = Some(txn),
-          op = Some("stream-append"))
+          op = Some("stream-append"), frameSchema = Some(assigned.schema))
       }
       if (compactEvery > 0 && (epoch + 1) % compactEvery == 0) {
         graft.ops.Compact.binPack(spark, dir,

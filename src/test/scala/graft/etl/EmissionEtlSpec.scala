@@ -107,6 +107,19 @@ class EmissionEtlSpec extends SparkSpec {
     assert(fresh.readTable("date").count() == 7306L)
   }
 
+  test("first run with only the logbook present loads facts with NULL car and driver ids") {
+    val fresh = new EmissionEtl(spark, Files.createTempDirectory("graft_wh_logbook").toString)
+    val absent = Files.createTempDirectory("graft_logbook_only").toString
+    val counts = fresh.run(s"$absent/drivers.csv", s"$absent/cars.csv", feeds.logbook)
+    assert(counts("drivers") == 0L && counts("cars") == 0L, counts)
+    assert(counts("car_driver_log") > 0L, counts)
+    val fact = fresh.readTable("car_driver_log")
+    assert(fact.count() == counts("car_driver_log"))
+    assert(fact.filter(col("car_id").isNotNull || col("driver_id").isNotNull).isEmpty)
+    val report = WarehouseQa.emissionOrphanReport(fresh).collect()
+    assert(report.forall(_.getAs[Long]("orphan_rows") == 0L), report.mkString(", "))
+  }
+
   test("emission rollups (the reference's headline analytics)") {
     firstRun
     val byBrand = etl.emissionByBrand()

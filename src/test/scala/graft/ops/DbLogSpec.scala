@@ -455,7 +455,11 @@ class DbLogSpec extends SparkSpec {
     DbLog.alterColumnType(spark, db, "m", "amount",
       org.apache.spark.sql.types.LongType)
     assert(TxLog.liveFiles(spark, db).toSet == filesBefore) // metadata-only
-    assert(DbLog.tableSchema(spark, db, "sib").isEmpty) // sibling unpinned
+    // sibling untouched: still the pin its creating commit wrote
+    assert(DbLog.tableSchema(spark, db, "sib").map(_.fieldNames.toSeq) ==
+      Some(Seq("id", "s")))
+    assert(DbLog.tableSchema(spark, db, "sib") ==
+      DbLog.tableSchema(spark, db, "sib", vSeed))
     val wide = DbLog.snapshot(spark, db, "m")
     assert(wide.schema("amount").dataType ==
       org.apache.spark.sql.types.LongType)

@@ -214,7 +214,7 @@ class TxLogSpec extends SparkSpec {
       Seq((1L, "a")).toDF("k", "v"), 0L)
     graft.streaming.TxLogIngest.appendSink(dir)(
       Seq((2L, "b", 7.5)).toDF("k", "v", "score"), 1L)
-    val merged = TxLog.snapshot(spark, dir, mergeSchema = true)
+    val merged = TxLog.snapshot(spark, dir)
     assert(merged.columns.toSet == Set("k", "v", "score"))
     val rows = merged.orderBy("k").collect()
     assert(rows(0).isNullAt(rows(0).fieldIndex("score"))) // old epoch NULL-fills

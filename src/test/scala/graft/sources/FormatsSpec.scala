@@ -194,6 +194,22 @@ class FormatsSpec extends SparkSpec {
     assert(etl.readTable("date").count() == 7306L)
   }
 
+  test("EmissionEtl with only the logbook present loads NULL-id facts into a fresh JDBC (Derby) warehouse") {
+    val feeds = graft.etl.ReferenceFeeds.resolve("/root/reference/data")
+    val db = Files.createTempDirectory("graft_derby_logbook").toString + "/wh"
+    val feedDir = Files.createTempDirectory("graft_derby_logbook_only").toString
+    val store = new JdbcStore(spark, s"jdbc:derby:$db;create=true")
+    val etl = new graft.etl.EmissionEtl(spark, feedDir, storeOpt = Some(store))
+    val counts = etl.run(s"$feedDir/drivers.csv", s"$feedDir/cars.csv", feeds.logbook)
+    assert(counts("drivers") == 0L && counts("cars") == 0L, counts)
+    assert(counts("car_driver_log") > 0L, counts)
+    val fact = etl.readTable("car_driver_log")
+    assert(fact.count() == counts("car_driver_log"))
+    assert(fact.filter(col("car_id").isNotNull || col("driver_id").isNotNull).isEmpty)
+    val report = graft.etl.WarehouseQa.emissionOrphanReport(etl).collect()
+    assert(report.forall(_.getAs[Long]("orphan_rows") == 0L), report.mkString(", "))
+  }
+
   test("ORC round trip preserves schema and values") {
     val dir = Files.createTempDirectory("graft_orc").toString + "/t"
     orders.write.orc(dir)
