@@ -7,11 +7,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * evidence generator, outside every query path): counts Spark jobs
   * per lifecycle phase of the fixed-cost operators (keyed replication
   * advance, DbMv star advance, rollup/BM25 ingest, JoinMv star
-  * refresh, per-commit changes range), so per-advance fixed costs are
-  * attributable job by job across optimization rounds.
+  * refresh, MvStore log follow, per-commit changes range), so
+  * per-advance fixed costs are attributable job by job across
+  * optimization rounds.
   *
   * args: optional probe-set filter (comma list of: repl, star,
-  * rollup, bm25, joinmv, changes, scan). Default: all. Input tables
+  * rollup, bm25, joinmv, mv, changes, scan). Default: all. Input tables
   * come from `$SPARK_GRAFT_SF_DIR` (default: the sf0.01 test data);
   * every table a run writes lives under one fresh temp directory,
   * deleted when the run ends.
@@ -21,7 +22,8 @@ object ProbeJobs {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val sets: Set[String] =
       if (args.isEmpty)
-        Set("repl", "star", "rollup", "bm25", "joinmv", "changes", "scan")
+        Set("repl", "star", "rollup", "bm25", "joinmv", "mv", "changes",
+          "scan")
       else args(0).split(",").map(_.trim).filter(_.nonEmpty).toSet
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -43,7 +45,7 @@ object ProbeJobs {
       if (traceAll) { println(s"TRACE $label"); trace = true }
       val j0 = jobs.get(); val t0 = System.nanoTime()
       val r = body
-      Thread.sleep(50) // listener drain
+      org.apache.spark.BusDrain(spark.sparkContext)
       println(f"PHASE $label%-22s jobs=${jobs.get() - j0}%3d secs=${(System.nanoTime() - t0) / 1e9}%6.2f")
       r
     }
@@ -217,6 +219,28 @@ object ProbeJobs {
         ddir, Seq("o_custkey"), Seq("seg"), Seq("price")))
       phase("jm_noop")(graft.ops.JoinMv.follow(store, "rev", fdir, ddir,
         Seq("o_custkey"), Seq("seg"), Seq("price")))
+    }
+
+    if (sets("mv")) {
+      // MvStore.followTxLog: the single-table log follower — seed, one
+      // advance over an upsert and a delete, then a no-op call
+      val dir = tmp("mv_src")
+      Tables.table(spark, sfDir, "orders")
+        .select("o_orderkey", "o_orderstatus", "o_totalprice")
+        .repartition(4).write.parquet(dir)
+      graft.ops.TxLog.convert(spark, dir)
+      val store = new graft.sources.ParquetStore(spark, tmp("mv_store"))
+      def follow() = graft.ops.MvStore.followTxLog(store, "fmv", dir,
+        Seq("o_orderstatus"), Seq("o_totalprice"))
+      phase("mv_seed")(follow())
+      graft.ops.UpsertWhere.byKeysDistributed(spark, dir, "o_orderkey",
+        graft.ops.TxLog.snapshot(spark, dir)
+          .filter(pmod(col("o_orderkey"), lit(97)) === 0)
+          .withColumn("o_totalprice", col("o_totalprice") * 2))
+      graft.ops.DeleteWhere.where(spark, dir,
+        pmod(col("o_orderkey"), lit(89)) === 0)
+      phase("mv_advance")(follow())
+      phase("mv_noop")(follow())
     }
 
     if (sets("changes")) {

@@ -138,34 +138,30 @@ object JoinMv {
       feed: DataFrame,
       keys: Seq[String]): DataFrame = {
     val whole = TxLog.snapshot(spark, dir, fromV)
-    if (keys.sizeIs != 1 || !whole.columns.contains(keys.head))
-      return if (feed.isEmpty) whole.limit(0) else whole
-    val k = keys.head
-    // ONE churn-sized pass answers emptiness AND the key bounds (the
-    // separate isEmpty limit-scan was one more job per dim term)
-    whole.schema(k).dataType match {
+    val key = keys match {
+      case Seq(k) if whole.columns.contains(k) => Some(k)
+      case _ => None
+    }
+    val probe = key.toSeq.flatMap(k => whole.schema(k).dataType match {
       case _: org.apache.spark.sql.types.NumericType
           if TxLog.statsColumns(spark, dir).contains(k) =>
-        val b = feed.agg(count(lit(1)), min(col(k).cast("double")),
-          max(col(k).cast("double"))).head()
-        if (b.getLong(0) == 0L) whole.limit(0)
-        else if (b.isNullAt(1)) whole.limit(0)
-        else TxLog.snapshotPruned(spark, dir, k,
-          Math.nextDown(b.getDouble(1)), Math.nextUp(b.getDouble(2)),
-          fromV)
-      case org.apache.spark.sql.types.StringType =>
-        val b = feed.agg(count(lit(1)), min(col(k)), max(col(k))).head()
-        if (b.getLong(0) == 0L) whole.limit(0)
-        else if (b.isNullAt(1)) whole.limit(0)
-        else
-          // FILE-level skipping from the footers' lexicographic
-          // manifest (unsigned UTF-8 order — Spark's own string
-          // order), then the residual range predicate row-group stats
-          // serve inside the survivors: an unclustered fact skips
-          // whole files, not just row groups
-          TxLog.snapshotPrunedString(spark, dir, k,
-            b.getString(1), b.getString(2), fromV)
-      case _ => if (feed.isEmpty) whole.limit(0) else whole
+        Seq(col(k).cast("double"))
+      case org.apache.spark.sql.types.StringType => Seq(col(k))
+      case _ => Nil
+    })
+    StarDelta.oldFactBounds(feed, probe) match {
+      case None => whole.limit(0)
+      case Some(Seq((lo: Double, hi: Double))) =>
+        TxLog.snapshotPruned(spark, dir, key.get,
+          Math.nextDown(lo), Math.nextUp(hi), fromV)
+      case Some(Seq((lo: String, hi: String))) =>
+        // FILE-level skipping from the footers' lexicographic
+        // manifest (unsigned UTF-8 order — Spark's own string order),
+        // then the residual range predicate row-group stats serve
+        // inside the survivors: an unclustered fact skips whole
+        // files, not just row groups
+        TxLog.snapshotPrunedString(spark, dir, key.get, lo, hi, fromV)
+      case _ => whole
     }
   }
 
@@ -195,15 +191,9 @@ object JoinMv {
     * order — each dim's USING keys must resolve against the
     * ACCUMULATED join, so a snowflake chain where dim 2 joins a
     * column dim 1 produced is expressed by listing them in chain
-    * order). The delta algebra telescopes exactly:
-    *
-    *   Δ(T₀⋈…⋈Tₙ) = Σᵢ T₀ᵒˡᵈ⋈…⋈Tᵢ₋₁ᵒˡᵈ ⋈ ΔTᵢ ⋈ Tᵢ₊₁ⁿᵉʷ⋈…⋈Tₙⁿᵉʷ
-    *
-    * (each summand joins everything LEFT of the delta at its old
-    * version and everything RIGHT at its new one, so consecutive
-    * summands cancel pairwise and the sum is new − old — no row
-    * double-counted however many tables churned in one advance).
-    * Every summand is a signed change feed; all of them union into
+    * order). The delta telescopes exactly ([[StarDelta.terms]], the
+    * algebra [[DbMv.refreshStar]] shares); every summand is a signed
+    * change feed, and all of them union into
     * ONE [[MvStore.refresh]] batch, inheriting replay stamps, the
     * writer fence and touched-shard rewrites. One cursor row per
     * table persists in the store.
@@ -332,29 +322,11 @@ object JoinMv {
         else Some(TxLog.asChangeFeed(
           TxLog.diff(spark, dirs(i), from(i), curs(i))).localCheckpoint())
       }
-    val cols = (keep :+ "change_type").map(col)
-    val terms: Seq[DataFrame] = dirs.indices.flatMap { i =>
-      feeds(i).map { fd =>
-        if (i == 0)
-          // ΔF ⋈ every dim at its NEW version
-          dims.indices.foldLeft(fd)((acc, j) =>
-            acc.join(snapAt(j + 1, curs(j + 1)), keysFor(j)))
-            .select(cols: _*)
-        else {
-          // T₀ᵒˡᵈ…Tᵢ₋₁ᵒˡᵈ ⋈ ΔTᵢ ⋈ Tᵢ₊₁ⁿᵉʷ…Tₙⁿᵉʷ — the fact's old
-          // read pruned by THIS dim's changed keys where possible
-          val f0 = prunedOld(spark, factDir, from(0), fd, keysFor(i - 1))
-          val left = (1 until i).foldLeft(f0)((acc, j) =>
-            acc.join(snapAt(j, from(j)), keysFor(j - 1)))
-          val mid = left.join(fd, keysFor(i - 1))
-          ((i + 1) to dims.length).foldLeft(mid)((acc, j) =>
-            acc.join(snapAt(j, curs(j)), keysFor(j - 1)))
-            .select(cols: _*)
-        }
-      }
-    }
-    MvStore.refresh(store, name, terms.reduce(_ unionByName _),
-      groupCols, sumCols,
+    val rows = StarDelta.terms(feeds, keysFor,
+      oldAt = i => snapAt(i, from(i)), newAt = i => snapAt(i, curs(i)),
+      factOld = (fd, ks) => prunedOld(spark, factDir, from(0), fd, ks),
+      out = keep :+ "change_type")
+    MvStore.refresh(store, name, rows, groupCols, sumCols,
       batchId = Some(
         s"star_${from.mkString("_")}__${curs.mkString("_")}"),
       minMaxCols = minMaxCols,

@@ -6,15 +6,16 @@ import org.apache.spark.sql.functions._
 import graft.sources.TableStore
 
 /** Stored incremental materialized view, maintained from a change
-  * feed — the state machine that turns [[Scd2.changes]] +
-  * [[Scd2.mvDelta]] into a PERSISTED aggregate that never rescans its
-  * source: seed once from a snapshot, then each refresh applies one
-  * signed delta (inserts/postimages add, preimages/deletes subtract)
-  * to only the shards the delta touches. The count/sum-only surface
-  * is deliberate: those aggregates are self-inverse under signed
-  * deltas; min/max are not (a deleted minimum is unrecoverable
-  * without the source), which is why they live in [[RollupStore]]'s
-  * grow-only state and not here.
+  * feed — the state machine that turns a [[Scd2.changes]]-shaped feed
+  * into a PERSISTED aggregate that never rescans its source: seed once
+  * from a snapshot, then each refresh applies one signed delta
+  * (inserts/postimages add, preimages/deletes subtract) to only the
+  * shards the delta touches. The delta algebra — the signed group
+  * delta and the null-safe state fold — is [[StarDelta]]'s, shared
+  * with [[DbMv]]. Count and sum are self-inverse under signed deltas;
+  * min/max are not (a deleted minimum is unrecoverable without the
+  * source), so they are opt-in and a removal recomputes its group
+  * from the caller's post-change rows.
   *
   * Same storage discipline as every state machine in this repo:
   * group-hash sharded cells, touched-shard-only rewrites, the
@@ -47,8 +48,6 @@ object MvStore {
     pmod(xxhash64(keys.map(col): _*), lit(nShards.toLong)).cast("int")
 
   private def sumCol(m: String) = s"sum_$m"
-  private def minCol(m: String) = s"min_$m"
-  private def maxCol(m: String) = s"max_$m"
 
   // the delta's order-independent content key (the implicit batch id
   // when the caller passes none) is computed inside [[refresh]]'s
@@ -92,9 +91,7 @@ object MvStore {
       // shards double against untouched long (parquet schema drift)
       val aggs = (count(lit(1)).as("n") +:
         sumCols.map(m => sum(col(m).cast("double")).as(sumCol(m)))) ++
-        minMaxCols.flatMap(m => Seq(
-          min(col(m).cast("double")).as(minCol(m)),
-          max(col(m).cast("double")).as(maxCol(m))))
+        StarDelta.extremeAggs(minMaxCols)
       val state = rows.groupBy(groupCols.map(col): _*)
         .agg(aggs.head, aggs.tail: _*)
         .withColumn("cell", cellOf(groupCols, shards))
@@ -135,36 +132,12 @@ object MvStore {
     val nShards = store.read(metaTable(name), MetaSchema).head().getInt(0)
     RollupStore.acquireFence(store, name, spark, "mv-refresh")
     try {
+      // ONE groupBy carries the signed sums AND the grow/dirty
+      // aggregates ([[StarDelta.groupDelta]]); sums stay `sign × m` in
+      // m's own arithmetic — the replay stamp below hashes them
       val adds = col("change_type").isin("insert", "update_postimage")
-      val growAggs = minMaxCols.flatMap(m => Seq(
-        min(when(adds, col(m).cast("double"))).as(s"add_min_$m"),
-        max(when(adds, col(m).cast("double"))).as(s"add_max_$m")))
-      val dirtyFlag = max(when(!adds, lit(1)).otherwise(lit(0))).as("__dirty")
-      // every group-key join in the merge is NULL-SAFE
-      // ([[RelationalOps.nullSafeMerge]]): a NULL group value names a
-      // real group (groupBy put it there); SQL's null-never-equals
-      // would split it across unpaired rows — one stored + one delta
-      // row per refresh instead of one merged group
-      val delta =
-        (if (minMaxCols.isEmpty) Scd2.mvDelta(feed, groupCols, sumCols)
-         else {
-           // ONE groupBy carries the signed sums AND the grow/dirty
-           // aggregates: the former two-aggregate shape (mvDelta +
-           // extras, null-safe-joined) evaluated the feed's join
-           // lineage twice inside this checkpoint for byte-identical
-           // output (both sides grouped the same feed by the same
-           // keys, so the join paired groups 1:1, null group included)
-           val sign = when(
-             col("change_type").isin("insert", "update_postimage"),
-             lit(1L)).otherwise(lit(-1L))
-           val aggs = (sum(col("__sign")).as("d_n") +:
-             sumCols.map(m =>
-               sum(col("__sign") * col(m)).as(s"d_$m"))) ++
-             growAggs :+ dirtyFlag
-           feed.withColumn("__sign", sign)
-             .groupBy(groupCols.map(col): _*)
-             .agg(aggs.head, aggs.tail: _*)
-         })
+      val delta = StarDelta.groupDelta(feed, groupCols, adds,
+          sumCols.map(m => m -> StarDelta.sign(adds) * col(m)), minMaxCols)
           .withColumn("cell", cellOf(groupCols, nShards))
           .localCheckpoint() // pinned: probed, keyed, and merged below
       // ONE aggregate over the pinned delta answers every bookkeeping
@@ -195,53 +168,14 @@ object MvStore {
         .filter(col("cell").cast("string").isin(touched: _*))
       if (stored.filter(col("last_batch") === bk).limit(1).count() > 0)
         return -1L
-      // full-outer with coalesced group keys (null-safe — the USING
-      // form emits null-group rows from BOTH sides unpaired)
-      val base = RelationalOps.nullSafeMerge(
-        stored.drop("cell", "last_batch"), delta.drop("cell"), groupCols)
-      val recomputed =
-        if (minMaxCols.isEmpty) base
-        else {
-          // dirty groups re-derive their extremes from the pruned
-          // post-change source; everybody else grows in place. A
-          // GROW-ONLY batch (no delete/preimage row — the common
-          // append advance) has no dirty group, and must not pay the
-          // post-change source read at all: the probe is one scan of
-          // the already-checkpointed delta, and the skip path feeds
-          // the merge NULL recomputes (never selected — no __dirty
-          // row exists to select them)
-          val dirty = delta.filter(col("__dirty") === 1)
-            .select(groupCols.map(col): _*)
-          // the skip is decided by the fused probe above — the
-          // former isEmpty limit-scan was one more job per refresh
-          if (!anyDirty)
-            minMaxCols.foldLeft(base)((d, m) =>
-              d.withColumn(s"rc_min_$m", lit(null).cast("double"))
-                .withColumn(s"rc_max_$m", lit(null).cast("double")))
-          else {
-            val mmAggs = minMaxCols.flatMap(m => Seq(
-              min(col(m).cast("double")).as(s"rc_min_$m"),
-              max(col(m).cast("double")).as(s"rc_max_$m")))
-            val recomp = RelationalOps
-              .nullSafeSemi(current.get, dirty, groupCols)
-              .groupBy(groupCols.map(col): _*)
-              .agg(mmAggs.head, mmAggs.tail: _*)
-            RelationalOps.nullSafeMerge(base, recomp, groupCols, "left")
-          }
-        }
-      val mmOut = minMaxCols.flatMap(m => Seq(
-        when(col("__dirty") === 1, col(s"rc_min_$m"))
-          .otherwise(least(col(minCol(m)), col(s"add_min_$m")))
-          .as(minCol(m)),
-        when(col("__dirty") === 1, col(s"rc_max_$m"))
-          .otherwise(greatest(col(maxCol(m)), col(s"add_max_$m")))
-          .as(maxCol(m))))
-      val merged = recomputed
-        .select(((groupCols.map(col) :+
-          (coalesce(col("n"), lit(0L)) + coalesce(col("d_n"), lit(0L))).as("n")) ++
-          sumCols.map(m =>
-            (coalesce(col(sumCol(m)), lit(0.0)) +
-              coalesce(col(s"d_$m"), lit(0.0))).as(sumCol(m))) ++ mmOut): _*)
+      // dirty groups re-derive their extremes from the pruned
+      // post-change source; a GROW-ONLY batch (no delete/preimage row —
+      // the common append advance) never reads it: the fused probe
+      // above already answered whether any group is dirty
+      val merged = StarDelta.fold(
+          stored.drop("cell", "last_batch"), delta.drop("cell"), groupCols,
+          "n", sumCols.map(m => sumCol(m) -> s"d_$m"), minMaxCols,
+          anyDirty = Some(anyDirty), current = current.orNull)
         .filter(col("n") > 0) // emptied groups leave the state
         .withColumn("cell", cellOf(groupCols, nShards))
         .withColumn("last_batch", lit(bk))

@@ -424,36 +424,6 @@ object Scd2 {
     pre.unionByName(post)
   }
 
-  /** The standard [[changes]] consumer: turn a change feed into the
-    * signed per-group delta of a count/sum materialized view —
-    * inserts and update postimages add, update preimages and deletes
-    * subtract. Adding the result to the MV's stored rows advances it
-    * to the feed's end version WITHOUT touching the dimension again:
-    * the incremental-view-maintenance algebra (count and sum are
-    * self-inverse under signed deltas; min/max are not, which is why
-    * they're absent from this surface).
-    *
-    * Output: groupCols…, d_n (signed row delta), d_<m> per measure.
-    * 100 TB shape: one aggregation over the delta-sized feed — MV
-    * refresh cost tracks the CHANGE volume, not the dimension size.
-    */
-  def mvDelta(
-      feed: DataFrame,
-      groupCols: Seq[String],
-      sumCols: Seq[String]): DataFrame = {
-    require(groupCols.nonEmpty)
-    val sign = when(
-      col("change_type").isin("insert", "update_postimage"), lit(1L))
-      .otherwise(lit(-1L))
-    feed
-      .withColumn("__sign", sign)
-      .groupBy(groupCols.map(col): _*)
-      .agg(
-        sum(col("__sign")).as("d_n"),
-        sumCols.map(m =>
-          sum(col("__sign") * col(m)).as(s"d_$m")): _*)
-  }
-
   /** Retention: physically drop closed intervals that ended at or
     * before `beforeVersion`. Current rows never expire (the live
     * dimension is always complete); [[asOf]] and [[changes]] at

@@ -155,6 +155,51 @@ class DbMvSpec extends SparkSpec {
     assert(DbLog.history(spark, db).head().getString(1).startsWith("mv_reseed"))
   }
 
+  test("NULL group attribute: append and delete refreshes keep ONE null group, no emptied rows") {
+    import spark.implicits._
+    val db = Files.createTempDirectory("dbmvnull").toString + "/db"
+    DbLog.create(spark, db)
+    // customer 2's group attribute is NULL — the joined rows group
+    // under NULL, a real group
+    val orders = Seq((1L, 1L, BigDecimal("1.00")), (2L, 2L, BigDecimal("2.00")))
+      .toDF("o_orderkey", "o_custkey", "rev")
+      .withColumn("rev", col("rev").cast("decimal(12,2)"))
+    val customers = Seq((1L, Some("A")), (2L, None))
+      .toDF("c_custkey", "c_grp")
+    DbLog.transact(spark, db, "seed") { txn =>
+      txn.append("orders", orders)
+      txn.append("customer", customers)
+    }
+    val v = DbMv.JoinView(fact = "orders", dim = "customer",
+      factKey = "o_custkey", dimKey = "c_custkey",
+      groupCols = Seq("c_grp"), sumCol = "rev")
+    DbMv.init(spark, db, "g", v)
+    def direct: DataFrame = {
+      val f = DbLog.snapshot(spark, db, "orders")
+      val d = DbLog.snapshot(spark, db, "customer")
+      f.join(d, f("o_custkey") === d("c_custkey"))
+        .groupBy("c_grp")
+        .agg(count(lit(1)).as("mv_count"), sum(col("rev")).as("mv_sum"))
+    }
+    def check(step: String): Unit = {
+      val got = DbMv.read(spark, db, "g")
+      assert(same(got, direct), s"$step: mv != recompute")
+      assert(got.filter(col("c_grp").isNull).count() == 1L,
+        s"$step: the NULL group split")
+      assert(got.filter(col("mv_count") <= 0L).isEmpty,
+        s"$step: an emptied or negative group stayed")
+    }
+    DbLog.transact(spark, db, "append")(_.append("orders",
+      Seq((3L, 2L, BigDecimal("3.00"))).toDF("o_orderkey", "o_custkey", "rev")
+        .withColumn("rev", col("rev").cast("decimal(12,2)"))))
+    DbMv.refresh(spark, db, "g")
+    check("after append")
+    DbLog.transact(spark, db, "delete")(
+      _.deleteWhere("orders", col("o_orderkey") === 2L))
+    DbMv.refresh(spark, db, "g")
+    check("after delete")
+  }
+
   // ---- N-table star form ---------------------------------------------
 
   private val starView = DbMv.StarView("orders",
