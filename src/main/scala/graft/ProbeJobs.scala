@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** Diagnostic main (committed on purpose — the round's job-count
   * evidence generator, outside every query path): counts Spark jobs
@@ -15,7 +16,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * rollup, bm25, joinmv, mv, changes, scan). Default: all. Input tables
   * come from `$SPARK_GRAFT_SF_DIR` (default: the sf0.01 test data);
   * every table a run writes lives under one fresh temp directory,
-  * deleted when the run ends.
+  * deleted when the run ends. `SPARK_GRAFT_PROBE_TRACE=1` lists the
+  * jobs of `star_advance`, `all` those of every phase: each with its
+  * SQL execution id and that execution's action call site.
   */
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
@@ -33,11 +36,28 @@ object ProbeJobs {
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     @volatile var trace = false
+    // a traced job names its SQL execution and that execution's action
+    // call site: an adaptive plan submits each stage as its own job,
+    // whose stage name is only the scheduler thread's frame
+    val actionSites = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          actionSites.put(s.executionId, s.description)
+        case s: SparkListenerSQLExecutionEnd =>
+          actionSites.remove(s.executionId)
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        if (trace) println(s"  JOB ${js.jobId}: " +
-          js.stageInfos.map(si => si.name.take(60)).mkString(" | "))
+        if (trace) {
+          val exec = Option(js.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          val site = exec.flatMap(id => Option(actionSites.get(id.toLong)))
+          println(s"  JOB ${js.jobId} exec=${exec.getOrElse("-")} " +
+            s"[${site.getOrElse("no SQL execution")}]: " +
+            js.stageInfos.map(si => si.name.take(60)).mkString(" | "))
+        }
       }
     })
     val traceAll = sys.env.get("SPARK_GRAFT_PROBE_TRACE").contains("all")

@@ -289,13 +289,15 @@ object DeletionVectors {
           if (cand.forall(_.rowBase.isDefined))
             RowTracking.withIds(spark, dir, cand, keepPos = true)
           else TxLog.readEntries(spark, dir, cand, withPos = true)
-        val m = withPos.join(k, keyCols, "left_semi").localCheckpoint()
+        // the row count and the touched file names ride the
+        // checkpoint job
+        val (m, obs) = RelationalOps.pin(
+          withPos.join(k, keyCols, "left_semi"),
+          count(lit(1)), collect_set(col("__graft_file")))
         val h = m.select(col("__graft_file").as("file"),
           col("__graft_pos").as("pos"))
-        val n = h.count()
-        val rels = h.select("file").distinct()
-          .collect().map(_.getString(0)).toSet
-        (Some(h), n, entries.filter(e => rels(e.name)), Some(m))
+        val rels = obs.getSeq[String](1).toSet
+        (Some(h), obs.getLong(0), entries.filter(e => rels(e.name)), Some(m))
       }
     // row tracking: the replacement row KEEPS the row it replaces' id
     // (materialized by key from the candidate files); genuine inserts
@@ -595,15 +597,16 @@ object DeletionVectors {
       else TxLog.readEntries(spark, dir, cand, withPos = true,
         pinOverride = pinOverride)
     // checkpoint the MATCHED ROWS (content, not just positions): the
-    // sidecar write, the position projections and the counts below
-    // all share one candidate scan
-    val matched = matchRows(withPos).localCheckpoint()
+    // sidecar write and the position projections share one candidate
+    // scan, and the row count and touched file names (bounded by the
+    // file count) ride the checkpoint job
+    val (matched, obs) = RelationalOps.pin(matchRows(withPos),
+      count(lit(1)), collect_set(col("__graft_file")))
     val newDel = matched
       .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-    val deletedRows = newDel.count()
+    val deletedRows = obs.getLong(0)
     if (deletedRows == 0) return StagedDv(Nil, Nil, Nil, 0, None)
-    val touchedRels = newDel.select("file").distinct()
-      .collect().map(_.getString(0)).toSet // bounded by file count
+    val touchedRels = obs.getSeq[String](1).toSet
     val touched = cand.filter(e => touchedRels(e.name))
     // carry forward the touched files' EXISTING deleted positions —
     // the new sidecar holds each touched file's complete set

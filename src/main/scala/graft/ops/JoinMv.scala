@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.sources.TableStore
@@ -117,53 +117,63 @@ object JoinMv {
     (rs(0), rs(1))
   }
 
-  /** The OLD-side scan of `dir` for a term whose delta is `feed`,
-    * pruned when the (single) join key is a column OF THIS TABLE
-    * with usable bounds: numeric + declared log stats → file-level
+  /** The key a term's OLD-side scan of `whole` (the fact at the
+    * window start) can be pruned on, with the column its feed's bounds
+    * are taken over: the (single) join key when it is a column OF THIS
+    * TABLE with usable bounds — numeric with declared log stats (as a
+    * double) or a string. Otherwise `None`: the scan reads whole (a
+    * snowflake key the delta joins on a column an earlier dim produced,
+    * or a key no stats serve).
+    */
+  private def pruneKey(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      whole: DataFrame,
+      keys: Seq[String]): Option[(String, Column)] = keys match {
+    case Seq(k) if whole.columns.contains(k) =>
+      whole.schema(k).dataType match {
+        case _: org.apache.spark.sql.types.NumericType
+            if TxLog.statsColumns(spark, dir).contains(k) =>
+          Some(k -> col(k).cast("double"))
+        case org.apache.spark.sql.types.StringType => Some(k -> col(k))
+        case _ => None
+      }
+    case _ => None
+  }
+
+  /** The OLD-side scan of `dir` for a term, pruned on `key`
+    * ([[pruneKey]]) by the bounds its feed's pin observed (`observed`,
+    * a [[StarDelta.boundsProbes]] row): numeric → file-level
     * [[TxLog.snapshotPruned]] over the changed keys' widened
     * [min, max] (1 ULP out each side — the double cast rounds
     * integral keys past 2^53); string → FILE-level skipping from the
     * footers' lexicographic manifest ([[TxLog.snapshotPrunedString]],
     * unsigned UTF-8 order, the same total order Spark compares in)
     * plus the residual range predicate row-group stats serve inside
-    * the surviving files. A key the table
-    * does not spell (snowflake terms — the delta joins a column an
-    * earlier dim produced) reads whole; an empty delta reads
-    * nothing.
+    * the surviving files. Without a key the scan reads whole; an empty
+    * delta reads nothing.
     */
   private def prunedOld(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       fromV: Int,
-      feed: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    val whole = TxLog.snapshot(spark, dir, fromV)
-    val key = keys match {
-      case Seq(k) if whole.columns.contains(k) => Some(k)
-      case _ => None
-    }
-    val probe = key.toSeq.flatMap(k => whole.schema(k).dataType match {
-      case _: org.apache.spark.sql.types.NumericType
-          if TxLog.statsColumns(spark, dir).contains(k) =>
-        Seq(col(k).cast("double"))
-      case org.apache.spark.sql.types.StringType => Seq(col(k))
-      case _ => Nil
-    })
-    StarDelta.oldFactBounds(feed, probe) match {
-      case None => whole.limit(0)
-      case Some(Seq((lo: Double, hi: Double))) =>
-        TxLog.snapshotPruned(spark, dir, key.get,
+      whole: DataFrame,
+      key: Option[String],
+      observed: Row): DataFrame =
+    (StarDelta.oldFactBounds(observed), key) match {
+      case (None, _) => whole.limit(0)
+      case (Some(Seq((lo: Double, hi: Double))), Some(k)) =>
+        TxLog.snapshotPruned(spark, dir, k,
           Math.nextDown(lo), Math.nextUp(hi), fromV)
-      case Some(Seq((lo: String, hi: String))) =>
+      case (Some(Seq((lo: String, hi: String))), Some(k)) =>
         // FILE-level skipping from the footers' lexicographic
         // manifest (unsigned UTF-8 order — Spark's own string order),
         // then the residual range predicate row-group stats serve
         // inside the survivors: an unclustered fact skips whole
         // files, not just row groups
-        TxLog.snapshotPrunedString(spark, dir, key.get, lo, hi, fromV)
+        TxLog.snapshotPrunedString(spark, dir, k, lo, hi, fromV)
       case _ => whole
     }
-  }
 
   private def cursorStarTable(name: String) = s"${name}__jmvs_cursor"
 
@@ -315,16 +325,22 @@ object JoinMv {
     store.markerSet(pendingT, PendingMarker.encode(from.zip(curs)))
     // per-table feeds are independent eager work (each diff's probe
     // jobs + one churn-sized checkpoint) — construct them concurrently
-    // (guide §2.6, the [[DbMv.refreshStar]] shape)
-    val feeds: Seq[Option[DataFrame]] =
+    // (guide §2.6, the [[DbMv.refreshStar]] shape). A dim feed's pin
+    // also observes the bounds of its term's old fact read.
+    lazy val factFrom = snapAt(0, from(0))
+    lazy val keyOf = keysFor.map(pruneKey(spark, factDir, factFrom, _))
+    val feeds: Seq[Option[(DataFrame, Row)]] =
       RelationalOps.inParallel(spark, dirs.indices.toSeq) { i =>
         if (from(i) == curs(i)) None
-        else Some(TxLog.asChangeFeed(
-          TxLog.diff(spark, dirs(i), from(i), curs(i))).localCheckpoint())
+        else Some(RelationalOps.pin(TxLog.asChangeFeed(
+            TxLog.diff(spark, dirs(i), from(i), curs(i))),
+          (if (i == 0) Nil
+           else StarDelta.boundsProbes(keyOf(i - 1).map(_._2).toSeq)): _*))
       }
-    val rows = StarDelta.terms(feeds, keysFor,
+    val rows = StarDelta.terms(feeds.map(_.map(_._1)), keysFor,
       oldAt = i => snapAt(i, from(i)), newAt = i => snapAt(i, curs(i)),
-      factOld = (fd, ks) => prunedOld(spark, factDir, from(0), fd, ks),
+      factOld = i => prunedOld(spark, factDir, from(0), factFrom,
+        keyOf(i - 1).map(_._1), feeds(i).get._2),
       out = keep :+ "change_type")
     MvStore.refresh(store, name, rows, groupCols, sumCols,
       batchId = Some(

@@ -136,33 +136,28 @@ object MvStore {
       // aggregates ([[StarDelta.groupDelta]]); sums stay `sign × m` in
       // m's own arithmetic — the replay stamp below hashes them
       val adds = col("change_type").isin("insert", "update_postimage")
-      val delta = StarDelta.groupDelta(feed, groupCols, adds,
-          sumCols.map(m => m -> StarDelta.sign(adds) * col(m)), minMaxCols)
-          .withColumn("cell", cellOf(groupCols, nShards))
-          .localCheckpoint() // pinned: probed, keyed, and merged below
-      // ONE aggregate over the pinned delta answers every bookkeeping
-      // probe of the refresh — touched cells, the content key's
-      // (count, xor-hash), the dirty-group flag, and the group count
-      // the call returns. The former shape paid up to four jobs for
-      // the same numbers (touched distinct-collect, deltaKey
-      // aggregate, dirty isEmpty, final delta.count — guide §1.2).
-      // The hash expression is byte-identical to [[deltaKey]]'s, so
-      // replay stamps from earlier refreshes keep matching.
+      // the pinned delta's own job observes every bookkeeping probe
+      // of the refresh — touched cells, the content key's (count,
+      // xor-hash), the dirty-group flag, and the group count the call
+      // returns ([[RelationalOps.pin]]). The content key is the one
+      // earlier refreshes stamped (the xor of xxhash64 over the group
+      // keys, d_n and the d_ sums), so their replay stamps keep
+      // matching.
       val hashed = xxhash64(
         (groupCols ++ Seq("d_n") ++ sumCols.map(m => s"d_$m")).map(col): _*)
-      val probeAggs = Seq(
-        collect_set(col("cell").cast("string")).as("cells"),
-        count(lit(1)).as("c"),
-        coalesce(expr("bit_xor(__h)"), lit(0L)).as("h")) ++
-        (if (minMaxCols.isEmpty) Nil
-         else Seq(max(col("__dirty")).as("any_dirty")))
-      val pr = delta.withColumn("__h", hashed)
-        .agg(probeAggs.head, probeAggs.tail: _*).head()
+      val (delta, pr) = RelationalOps.pin(
+        StarDelta.groupDelta(feed, groupCols, adds,
+            sumCols.map(m => m -> StarDelta.sign(adds) * col(m)), minMaxCols)
+          .withColumn("cell", cellOf(groupCols, nShards)),
+        collect_set(col("cell").cast("string")),
+        count(lit(1)),
+        coalesce(bit_xor(hashed), lit(0L)),
+        count(when(col("__dirty") === 1, lit(1))))
       val touched: Seq[String] = pr.getSeq[String](0)
       if (touched.isEmpty) return 0L
       val groupsTouched = pr.getLong(1)
       val bk = batchId.getOrElse(s"c${groupsTouched}h${pr.getLong(2)}")
-      val anyDirty = minMaxCols.nonEmpty && pr.getInt(3) == 1
+      val anyDirty = minMaxCols.nonEmpty && pr.getLong(3) > 0L
       val st = stateTable(name)
       val stored = store.read(st)
         .filter(col("cell").cast("string").isin(touched: _*))
@@ -170,7 +165,7 @@ object MvStore {
         return -1L
       // dirty groups re-derive their extremes from the pruned
       // post-change source; a GROW-ONLY batch (no delete/preimage row —
-      // the common append advance) never reads it: the fused probe
+      // the common append advance) never reads it: the pin's probe
       // above already answered whether any group is dirty
       val merged = StarDelta.fold(
           stored.drop("cell", "last_batch"), delta.drop("cell"), groupCols,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -443,12 +443,55 @@ object RelationalOps {
 
   /** NULL-SAFE left-semi on `keys`: `l`'s rows whose key tuple —
     * NULLs matching NULLs — appears in `r`. Output is `l` unchanged.
+    * `r`'s key set is broadcast: callers pass a churn-sized one (the
+    * groups a delta touches), usually a checkpoint with no size
+    * statistics, which would otherwise plan a sort-merge join that AQE
+    * turns into a broadcast at run time — with a job count that
+    * depends on which stage finished first.
     */
   def nullSafeSemi(l: DataFrame, r: DataFrame, keys: Seq[String])
       : DataFrame =
-    l.alias("__nsl").join(r.select(keys.map(col): _*).alias("__nsr"),
+    l.alias("__nsl").join(
+      broadcast(r.select(keys.map(col): _*)).alias("__nsr"),
       keys.map(c => col(s"__nsl.$c") <=> col(s"__nsr.$c")).reduce(_ && _),
       "left_semi")
+
+  /** Materialize `df` (`localCheckpoint`) and return it with the
+    * values of `probes` — aggregates over its rows, read back by
+    * position — computed INSIDE the checkpoint job: they ride the plan
+    * as observed metrics (`Dataset.observe`), so no probe submits a
+    * job of its own (a count or a distinct-collect re-reading the
+    * pinned frame costs two jobs under AQE). Metrics accumulate in the
+    * checkpoint job's result stage, which runs each partition once,
+    * so the values are exact; over zero rows each is its aggregate's
+    * empty value (count 0, min/max NULL, an empty set). They are read
+    * from the checkpoint's own query execution once the action has
+    * returned — what an `Observation` would deliver later through the
+    * listener bus, with no wait — so a failing action simply rethrows.
+    * The checkpoint's call site names pin's caller, so a job trace
+    * attributes it to the site that pinned.
+    */
+  private[graft] def pin(df: DataFrame, probes: Column*): (DataFrame, Row) = {
+    val sc = df.sparkSession.sparkContext
+    val caller = new Throwable().getStackTrace
+      .find(!_.getClassName.startsWith("graft.ops.RelationalOps"))
+      .map(f => s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}")
+    val saved = sc.getLocalProperty("callSite.short")
+    caller.foreach(sc.setCallSite)
+    try {
+      if (probes.isEmpty) (df.localCheckpoint(), Row.empty)
+      else {
+        val name = s"__graft_pin_${java.util.UUID.randomUUID()}"
+        val named = probes.zipWithIndex.map { case (p, i) => p.as(s"p$i") }
+        val observed = df.observe(name, named.head, named.tail: _*)
+        val pinned = observed.localCheckpoint()
+        val row = observed.queryExecution.observedMetrics.getOrElse(name,
+          throw new IllegalStateException(
+            s"pin: the checkpoint reported no observed metrics for $name"))
+        (pinned, row)
+      }
+    } finally sc.setLocalProperty("callSite.short", saved)
+  }
 
   /** Run INDEPENDENT Spark actions concurrently (guide §2.6): the
     * driver's sequential action calls leave executors idle through

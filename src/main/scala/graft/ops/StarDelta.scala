@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The delta algebra of the incremental join-aggregate views —
@@ -26,16 +26,17 @@ object StarDelta {
     * tables churned. `feeds(i)` is table i's change feed (0 the fact,
     * then the dims in chain order; `None`: no churn, no term);
     * `keys(j)` dim j+1's USING keys against the accumulated join;
-    * `factOld(feed, keys)` the fact's old cut for a dim term (bounded
-    * by the caller — see [[oldFactBounds]]). Output: the `out` columns
-    * of every term, unioned; at least one feed must be present.
+    * `factOld(i)` the fact's old cut for dim i's term (bounded by the
+    * caller from that dim's feed — see [[oldFactBounds]]). Output: the
+    * `out` columns of every term, unioned; at least one feed must be
+    * present.
     */
   def terms(
       feeds: Seq[Option[DataFrame]],
       keys: Seq[Seq[String]],
       oldAt: Int => DataFrame,
       newAt: Int => DataFrame,
-      factOld: (DataFrame, Seq[String]) => DataFrame,
+      factOld: Int => DataFrame,
       out: Seq[String]): DataFrame = {
     val n = feeds.length
     val cols = out.map(col)
@@ -48,7 +49,7 @@ object StarDelta {
         else {
           // T₀ᵒˡᵈ…Tᵢ₋₁ᵒˡᵈ ⋈ ΔTᵢ ⋈ Tᵢ₊₁ⁿᵉʷ…Tₙⁿᵉʷ — the fact's old read
           // bounded by THIS dim's changed keys
-          val left = (1 until i).foldLeft(factOld(fd, keys(i - 1)))(
+          val left = (1 until i).foldLeft(factOld(i))(
             (acc, j) => acc.join(oldAt(j), keys(j - 1)))
           ((i + 1) until n).foldLeft(left.join(fd, keys(i - 1)))(
             (acc, j) => acc.join(newAt(j), keys(j - 1)))
@@ -137,8 +138,10 @@ object StarDelta {
     * drained prefix with `reserveK > 0` ([[DbMv.ExtremeReserve]]) —
     * and then takes the extreme recomputed from `current`, the
     * post-change rows semi-joined to the dirty groups and read only if
-    * one exists. `anyDirty` passes that answer when already known
-    * (reserve-free folds); else one aggregate decides. Output:
+    * one exists. Reserve-free folds with min/max take whether any
+    * delta group is dirty as `anyDirty` (the caller observes it when
+    * it pins the delta); with reserves the merge decides, observed by
+    * the merge's own checkpoint ([[RelationalOps.pin]]). Output:
     * `groupCols…, countCol, sums…, extremes…` for every merged group,
     * emptied ones (count ≤ 0) included.
     */
@@ -154,11 +157,13 @@ object StarDelta {
       current: => DataFrame = null): DataFrame = {
     val gcols = groupCols.map(col)
     val k = if (minMaxCols.isEmpty) 0 else reserveK
-    require(k <= 0 || anyDirty.isEmpty,
-      "fold: with reserves the dirty groups are decided after the merge")
+    require(if (k > 0) anyDirty.isEmpty
+      else minMaxCols.isEmpty || anyDirty.isDefined,
+      "fold: reserve-free min/max take the delta's dirty probe as " +
+        "anyDirty; with reserves the dirty groups are decided after the merge")
     val base = RelationalOps.nullSafeMerge(stored, delta, groupCols)
-    val (preRc, dirtyCol) =
-      if (k <= 0) (base, col("__dirty") === 1)
+    val (preRc, dirtyCol, dirty) =
+      if (k <= 0) (base, col("__dirty") === 1, anyDirty.contains(true))
       else {
         val resUdf = udf((minres: Seq[Double], maxres: Seq[Double],
             nn: Long, delMin: Seq[Double], addMin: Seq[Double],
@@ -174,20 +179,20 @@ object StarDelta {
             arr(s"delmin_$m"), arr(s"addmin_$m"),
             arr(s"delmax_$m"), arr(s"addmax_$m"),
             coalesce(col(s"d_nn_$m"), lit(0L)))))
-        (withRes.withColumn("__rdirty",
-          minMaxCols.map(m => col(s"__res_$m").getField("dirty"))
-            .reduce(_ || _)).localCheckpoint(),
-          col("__rdirty"))
+        val (pinned, obs) = RelationalOps.pin(
+          withRes.withColumn("__rdirty",
+            minMaxCols.map(m => col(s"__res_$m").getField("dirty"))
+              .reduce(_ || _)),
+          count(when(col("__rdirty"), lit(1))))
+        (pinned, col("__rdirty"), obs.getLong(0) > 0L)
       }
     val recomputed =
       if (minMaxCols.isEmpty) preRc
       else {
         // without reserves the dirty groups are exactly the delta's
         // __dirty rows (stored-only rows of the merge carry NULL
-        // there), so the count and the rows both read the delta
+        // there), so the recompute reads the delta
         val dirtySrc = if (k <= 0) delta else preRc
-        val dirty = anyDirty.getOrElse(
-          dirtySrc.agg(count(when(dirtyCol, lit(1)))).head().getLong(0) > 0L)
         if (!dirty)
           minMaxCols.foldLeft(preRc)((d, m) => {
             val d2 = d
@@ -204,7 +209,9 @@ object StarDelta {
           val recomp = RelationalOps.nullSafeSemi(current,
               dirtySrc.filter(dirtyCol).select(gcols: _*), groupCols)
             .groupBy(gcols: _*).agg(mmAggs.head, mmAggs.tail: _*)
-          RelationalOps.nullSafeMerge(preRc, recomp, groupCols, "left")
+          // one row per dirty group: broadcast from the plan's start
+          // (see [[RelationalOps.nullSafeSemi]])
+          RelationalOps.nullSafeMerge(preRc, broadcast(recomp), groupCols, "left")
         }
       }
     def res(m: String, f: String) = col(s"__res_$m").getField(f)
@@ -236,20 +243,22 @@ object StarDelta {
       sums.map { case (s, d) => added(s, d) } ++ mmOut): _*)
   }
 
-  /** ONE churn-sized aggregate over a dim term's `feed` bounding the
-    * fact's old-cut read: `None` when that read is empty (no feed row,
-    * or an all-NULL key no row can equi-join), `Some(Nil)` when no key
-    * bounds it (`keys` empty: an emptiness probe, read whole), else
+  /** The probes a dim term's feed pin observes
+    * ([[RelationalOps.pin]]) to bound the fact's old-cut read: the row
+    * count, then each of `keys`' min and max.
+    */
+  def boundsProbes(keys: Seq[Column]): Seq[Column] =
+    count(lit(1)) +: keys.flatMap(k => Seq(min(k), max(k)))
+
+  /** The old-cut bounds in a [[boundsProbes]] row: `None` when that
+    * read is empty (no feed row, or an all-NULL key no row can
+    * equi-join), `Some(Nil)` when no key bounds it (read whole), else
     * each key's (lo, hi). File pruning by the bounds is each engine's.
     */
-  def oldFactBounds(feed: DataFrame, keys: Seq[Column])
-      : Option[Seq[(Any, Any)]] =
-    if (keys.isEmpty) { if (feed.isEmpty) None else Some(Nil) }
-    else {
-      val aggs = count(lit(1)) +: keys.flatMap(k => Seq(min(k), max(k)))
-      val b = feed.agg(aggs.head, aggs.tail: _*).head()
-      if (b.getLong(0) == 0L || keys.indices.exists(i => b.isNullAt(2 * i + 1)))
-        None
-      else Some(keys.indices.map(i => (b.get(2 * i + 1), b.get(2 * i + 2))))
-    }
+  def oldFactBounds(observed: Row): Option[Seq[(Any, Any)]] = {
+    val keys = 0 until (observed.length - 1) / 2
+    if (observed.getLong(0) == 0L || keys.exists(i => observed.isNullAt(2 * i + 1)))
+      None
+    else Some(keys.map(i => (observed.get(2 * i + 1), observed.get(2 * i + 2))))
+  }
 }

@@ -2172,11 +2172,10 @@ object TxLog {
     // position sets per side of the DV-only pairs: newly HIDDEN
     // positions (grown vector → delete rows) and newly VISIBLE ones
     // (a RESTORE shrank a vector → insert rows) — FUSED with the
-    // change-data coverage split into ONE churn-sized checkpoint and
-    // ONE four-way count aggregate. The former shape paid a second
-    // checkpoint (hidden ⟕ cdc) and a second aggregate per DV-grown
-    // table per advance; a 3-table star advance ran three of each
-    // (guide §1.2 — the advance's cost is its fixed job count).
+    // change-data coverage split into ONE churn-sized checkpoint whose
+    // own job observes the emptiness counts ([[RelationalOps.pin]]):
+    // a star advance runs one per DV-grown table, and its cost is its
+    // fixed job count (guide §1.2).
     // covered = hidden positions a sidecar recorded content for
     // (served zero base-file bytes); uncovered falls back to the raw
     // positional read.
@@ -2232,12 +2231,12 @@ object TxLog {
             }
           }
         if (paths.isEmpty) {
-          // no sidecar can serve: the delta checkpoint alone, one
-          // two-count aggregate, every hidden position uncovered
-          val delta = delta0.localCheckpoint()
-          val cnt = delta.agg(
+          // no sidecar can serve: the delta checkpoint alone, its two
+          // counts observed in the same job, every hidden position
+          // uncovered
+          val (delta, cnt) = RelationalOps.pin(delta0,
             count(when(col("__in_before").isNull, 1)),
-            count(when(col("__in_after").isNull, 1))).head()
+            count(when(col("__in_after").isNull, 1)))
           val h = delta.filter(col("__in_before").isNull)
             .select(posK.map(col): _*)
           val r = delta.filter(col("__in_after").isNull)
@@ -2263,13 +2262,13 @@ object TxLog {
           // bytes) — the dedup makes the left join 1:1, so the fused
           // frame keeps the delta's exact multiset
           val cdc = raw.dropDuplicates(posK).withColumn("__cdc_hit", lit(1))
-          val fused = delta0.join(cdc, posK, "left_outer").localCheckpoint()
-          // ONE aggregate answers all four emptiness probes
+          // the three emptiness probes ride the checkpoint job
           val hiddenC = col("__in_before").isNull
-          val cnt = fused.agg(
+          val (fused, cnt) = RelationalOps.pin(
+            delta0.join(cdc, posK, "left_outer"),
             count(when(hiddenC && col("__cdc_hit").isNotNull, 1)),
             count(when(hiddenC && col("__cdc_hit").isNull, 1)),
-            count(when(col("__in_after").isNull, 1))).head()
+            count(when(col("__in_after").isNull, 1)))
           val covered = fused.filter(hiddenC && col("__cdc_hit").isNotNull)
             .drop("__in_after", "__in_before", "__cdc_hit")
           val uncov = fused.filter(hiddenC && col("__cdc_hit").isNull)

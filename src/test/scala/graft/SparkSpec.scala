@@ -7,6 +7,25 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String) = s"/root/testdata/sf0.001"
+
+  /** Runs `body` and returns it with the Spark jobs it submitted, read
+    * after the listener bus drains.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.BusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.BusDrain(spark.sparkContext)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

@@ -4,8 +4,6 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.BusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -28,29 +26,13 @@ class SchemaPinSpec extends SparkSpec {
     spark.range(lo, hi).select(col("id").as("k"), (col("id") * 3).as("v"),
       concat(lit("r"), col("id").cast("string")).as("s"))
 
-  /** Runs `body` and returns it with the Spark jobs it submitted. */
-  private def counted[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    BusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      BusDrain(spark.sparkContext)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("job counts repeat: one write/read sequence submits the same jobs on three fresh tables") {
     def sequence(): Seq[(String, Int)] = {
       val dir = freshDir("pin_jobs")
       rows(0, 400).repartition(4).write.parquet(dir)
       val ops = Seq.newBuilder[(String, Int)]
       def op(label: String)(body: => Any): Unit =
-        ops += label -> counted(body)._2
+        ops += label -> jobsOf(body)._2
       op("convert")(TxLog.convert(spark, dir))
       op("append")(TxLog.append(spark, dir, rows(400, 500).coalesce(1)))
       val v0 = TxLog.currentVersion(spark, dir)
