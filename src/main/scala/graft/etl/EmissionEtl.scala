@@ -38,7 +38,10 @@ class EmissionEtl(
 
   def tableExists(name: String): Boolean = store.exists(name)
 
-  def readTable(name: String): DataFrame = store.read(name)
+  /** A warehouse table read with its declared schema
+    * ([[Schemas.warehouse]]): no read infers one from parquet footers.
+    */
+  def readTable(name: String): DataFrame = store.read(name, Schemas.warehouse(name))
 
   /** Dim append of pre-filtered novel rows, keyed by the surrogate
     * key. ParquetStore stages + swaps (a crash leaves the old or the
@@ -204,12 +207,11 @@ class EmissionEtl(
       if (!tableExists("city"))
         if (tableExists("country")) withCountry
         else incoming.select(col("city_name"), lit(null).cast("int").as("country_id"))
-      else if (strictCompat) {
-        val countryIdType = readTable("country").schema("country_id").dataType
+      else if (strictCompat)
         antiJoinNew(incoming, readTable("city"), Seq("city_name"),
           broadcastRight = true)
-          .select(col("city_name"), lit(null).cast(countryIdType).as("country_id"))
-      }
+          .select(col("city_name"),
+            lit(null).cast(Schemas.cityTable("country_id").dataType).as("country_id"))
       else antiJoinNew(withCountry, readTable("city"), Seq("city_name", "country_id"),
         broadcastRight = true)
     val existingMax =
@@ -240,13 +242,13 @@ class EmissionEtl(
     // a dim whose feed has never arrived has no table yet: read it as
     // the reference's empty CREATE TABLE IF NOT EXISTS table, so its
     // ids load NULL as the reference's left merges give
-    def dim(name: String, schema: org.apache.spark.sql.types.StructType) =
+    def dim(name: String) =
       if (tableExists(name)) readTable(name)
       else spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    val cars = dim("cars", Schemas.carsTable)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), Schemas.warehouse(name))
+    val cars = dim("cars")
       .select((Seq("car_id", "co2_emission_g_per_km") ++ Schemas.carNaturalKey).distinct.map(col): _*)
-    val drivers = dim("drivers", Schemas.driversTable)
+    val drivers = dim("drivers")
     val dateDim = readTable("date").select("date_id", "date")
     val city = readTable("city").select("city_id", "city_name", "country_id")
     val country = readTable("country")
@@ -306,44 +308,53 @@ class EmissionEtl(
     * batch touches (plus the null partition for unmatched-date rows) —
     * at warehouse scale the rewrite/read cost is bounded by the
     * batch's date spread, not the table size (SURVEY §7.7).
+    *
+    * The fact lineage runs once: the deduped batch is pinned, with its
+    * row count and its months observed in the same job, and the novel
+    * rows are pinned (counted the same way) and written from the pin.
     */
   def appendFact(fact: DataFrame): Long = {
-    val deduped = dedupKeepFirst(fact, Schemas.factIdKey, Seq(col("distance_km")))
-      .withColumn("p_month", (col("date_id") / lit(100)).cast("int"))
-    val novel =
-      if (!tableExists("car_driver_log")) deduped
+    def write(novel: DataFrame, n: Long): Long = {
+      if (n > 0) store.appendPartitioned(novel, "car_driver_log", "p_month")
+      n
+    }
+    withPin(
+      dedupKeepFirst(fact, Schemas.factIdKey, Seq(col("distance_km")))
+        .withColumn("p_month", (col("date_id") / lit(100)).cast("int")),
+      count(lit(1)), collect_set(col("p_month")), max(col("p_month").isNull)) { (batch, seen) =>
+      if (seen.getLong(0) == 0L) 0L
+      else if (!tableExists("car_driver_log")) write(batch, seen.getLong(0))
       else {
-        val months = deduped.select("p_month").distinct()
-          .collect().map(r => Option(r.get(0)).map(_.toString.toInt))
-        val monthVals = months.flatten.toSeq
         val existing = readTable("car_driver_log")
           .filter(
-            col("p_month").isin(monthVals: _*) ||
-              (if (months.contains(None)) col("p_month").isNull else lit(false)))
-        antiJoinNew(deduped, existing, Schemas.factIdKey)
+            col("p_month").isin(seen.getSeq[Int](1): _*) ||
+              (if (seen.getBoolean(2)) col("p_month").isNull else lit(false)))
+        withPin(antiJoinNew(batch, existing, Schemas.factIdKey), count(lit(1))) { (novel, n) =>
+          write(novel, n.getLong(0))
+        }
       }
-    val n = novel.count()
-    if (n > 0) store.appendPartitioned(novel, "car_driver_log", "p_month")
-    n
+    }
   }
 
   /** One scheduled run (X1/X2): dims then fact, all idempotent. A run
     * whose feeds are all absent loads nothing, also into a fresh
-    * warehouse (only `date` is created then).
+    * warehouse (only `date` is created then). The logbook feed is
+    * parsed once: the countries, the cities and the fact read its pin.
     */
   def run(driversCsv: String, carsCsv: String, logbookCsv: String): Map[String, Long] = {
     ensureDateDim()
     val drivers = readFeed(driversCsv, Schemas.driversFeed)
     val carsRaw = readFeed(carsCsv, Schemas.carsFeedRaw)
-    val logbook = readFeed(logbookCsv, Schemas.logbookFeed)
-    val nDrivers = loadDrivers(drivers)
-    val nCars = loadCars(carsRaw)
-    val nCountries = loadCountries(logbook)
-    val nCities = loadCities(logbook)
-    val nFact = if (logbook.isEmpty) 0L else appendFact(buildFact(logbook))
-    Map(
-      "drivers" -> nDrivers, "cars" -> nCars, "country" -> nCountries,
-      "city" -> nCities, "car_driver_log" -> nFact)
+    withPin(readFeed(logbookCsv, Schemas.logbookFeed), count(lit(1))) { (logbook, trips) =>
+      val nDrivers = loadDrivers(drivers)
+      val nCars = loadCars(carsRaw)
+      val nCountries = loadCountries(logbook)
+      val nCities = loadCities(logbook)
+      val nFact = if (trips.getLong(0) == 0L) 0L else appendFact(buildFact(logbook))
+      Map(
+        "drivers" -> nDrivers, "cars" -> nCars, "country" -> nCountries,
+        "city" -> nCities, "car_driver_log" -> nFact)
+    }
   }
 
   // ------------------------------------------------------------- analytics

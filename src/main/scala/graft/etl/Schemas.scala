@@ -80,6 +80,59 @@ object Schemas {
     StructField("car_id", IntegerType) +:
       carsFeedRaw.fields.toSeq.map(f => f.copy(name = carsRename(f.name))))
 
+  /** Warehouse `country` table as [[EmissionEtl.loadCountries]] writes
+    * it.
+    */
+  val countryTable: StructType = StructType(Seq(
+    StructField("country_id", IntegerType),
+    StructField("country_name", StringType)))
+
+  /** Warehouse `city` table as [[EmissionEtl.loadCities]] writes it. */
+  val cityTable: StructType = StructType(Seq(
+    StructField("city_id", IntegerType),
+    StructField("city_name", StringType),
+    StructField("country_id", IntegerType)))
+
+  /** Warehouse `date` table: the [[graft.dims.DateDim.generate]]
+    * columns (dags/create_tables.py:6-15).
+    */
+  val dateTable: StructType = StructType(Seq(
+    StructField("date_id", IntegerType),
+    StructField("date", DateType),
+    StructField("week_day", StringType),
+    StructField("day", IntegerType),
+    StructField("month", IntegerType),
+    StructField("week", IntegerType),
+    StructField("quarter", IntegerType),
+    StructField("year", IntegerType)))
+
+  /** Warehouse fact table `car_driver_log` as [[EmissionEtl.appendFact]]
+    * writes it: the nine [[EmissionEtl.buildFact]] columns, then the
+    * month partition column `p_month` (`date_id` / 100).
+    */
+  val factTable: StructType = StructType(Seq(
+    StructField("car_id", IntegerType),
+    StructField("driver_id", IntegerType),
+    StructField("start_city_id", IntegerType),
+    StructField("start_country_id", IntegerType),
+    StructField("target_city_id", IntegerType),
+    StructField("target_country_id", IntegerType),
+    StructField("distance_km", DoubleType),
+    StructField("date_id", IntegerType),
+    StructField("total_emission", DoubleType),
+    StructField("p_month", IntegerType)))
+
+  /** Every warehouse table's declared schema, by table name: the ETL
+    * reads each table with it, so no read infers a schema from files.
+    */
+  val warehouse: Map[String, StructType] = Map(
+    "drivers" -> driversTable,
+    "cars" -> carsTable,
+    "country" -> countryTable,
+    "city" -> cityTable,
+    "date" -> dateTable,
+    "car_driver_log" -> factTable)
+
   /** The 6-col natural join key logbook↔cars (dags/emission-dag.py:158).
     * `cylinders`/`fuel_type` are nullable ⇒ joins must be null-safe.
     */

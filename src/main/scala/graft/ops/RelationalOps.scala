@@ -493,6 +493,22 @@ object RelationalOps {
     } finally sc.setLocalProperty("callSite.short", saved)
   }
 
+  /** [[pin]] `df`, hand the pinned frame and the observed row to `f`,
+    * then drop the checkpoint's cached blocks: nothing may read the
+    * pinned frame after `f` returns. Without the release the blocks
+    * stay cached until the driver's garbage collector reclaims the
+    * frame, however long that takes.
+    */
+  private[graft] def withPin[T](df: DataFrame, probes: Column*)(
+      f: (DataFrame, Row) => T): T = {
+    val (pinned, row) = pin(df, probes: _*)
+    try f(pinned, row)
+    finally pinned.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+  }
+
   /** Run INDEPENDENT Spark actions concurrently (guide §2.6): the
     * driver's sequential action calls leave executors idle through
     * each job's tail (and serialize the per-job fixed scheduling

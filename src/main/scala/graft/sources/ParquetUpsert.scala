@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 import graft.ops.RelationalOps
 
 /** Staged upsert on a parquet table — the Spark realization of the
@@ -19,6 +20,10 @@ import graft.ops.RelationalOps
   * (partition-overwrite) or a transactional-log format; the staged
   * swap here is the correct whole-table primitive the partitioned
   * variant composes from.
+  *
+  * Returns the merged table's row count, observed while the stage is
+  * written (an [[Observation]] on the write), so no job re-reads the
+  * stage to count it.
   */
 object ParquetUpsert {
 
@@ -36,12 +41,16 @@ object ParquetUpsert {
       if (fs.exists(target)) {
         val existing = spark.read.parquet(tablePath)
         RelationalOps.antiJoinNew(existing, updates, keys)
-          .unionByName(updates.select(existing.columns.map(org.apache.spark.sql.functions.col): _*))
+          .unionByName(updates.select(existing.columns.map(col): _*))
       } else updates
 
     fs.delete(stage, true)
-    merged.write.mode("overwrite").parquet(stage.toString)
-    val n = spark.read.parquet(stage.toString).count()
+    // read only after the write returns: a failed write never completes
+    // the observation, and the exception propagates before any wait
+    val rows = Observation()
+    merged.observe(rows, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(stage.toString)
+    val n = rows.get("n").asInstanceOf[Long]
 
     // atomic publish: target → old, stage → target, drop old
     fs.delete(old, true)

@@ -70,6 +70,56 @@ object ReferenceFeeds {
     feeds
   }
 
+  /** A later day's feeds over a warehouse loaded from [[generated]],
+    * written once per JVM: 5 known and [[DayTwoDrivers]] new drivers,
+    * 3 known and [[DayTwoCars]] new cars, and a logbook that repeats 5
+    * loaded trips and adds [[DayTwoTrips]] new ones. The new trips run
+    * through [[DayTwoCities]] new cities, one of them in the new country
+    * "Sweden" reached only as a target, and half of them fall in a
+    * month the first load never saw.
+    */
+  lazy val secondDay: Feeds = {
+    val base = generated
+    val dir = Files.createTempDirectory("graft_ref_feeds_day2")
+    def rows(path: String) =
+      Files.readAllLines(Paths.get(path), StandardCharsets.UTF_8).asScala.toIndexedSeq.tail
+    val knownDrivers = rows(base.drivers).take(5)
+    val knownCars = rows(base.cars).take(3)
+    val newDrivers = (0 until DayTwoDrivers).map(i => s"Uusitalo$i,Aino,Kaupunki 001")
+    val newCars = (0 until DayTwoCars).map(i =>
+      s"TESLA,TES-$i,COMPACT,1.$i,,A1,${if (i == 0) "" else "E"},1.$i,1.$i,1.$i,99,$i")
+    // a car's 6-col natural key in logbook column order
+    def carKey(line: String) = {
+      val f = line.split(",", -1)
+      Seq(f(0), f(1), f(3), f(4), f(6), f(5)).mkString(",")
+    }
+    val cars = (newCars ++ knownCars).map(carKey)
+    val drivers = (newDrivers ++ knownDrivers).map(_.split(",", -1).take(2).mkString(","))
+    val newTrips = (0 until DayTwoTrips).map { i =>
+      val start = if (i % 2 == 0) s"Uusikaupunki ${i % 3},Finland" else "Kaupunki 002,Finland"
+      val target = if (i % 5 == 0) "Stockholm,Sweden" else s"Uusikaupunki ${i % 3},Finland"
+      val date = if (i % 2 == 0) f"2014-06-${1 + i / 2}%02d" else f"2015-02-${1 + i / 2}%02d"
+      s"${cars(i % cars.size)},${drivers(i % drivers.size)},$start,$target,${10 + i}.5,$date"
+    }
+    def csv(name: String, header: Seq[String], lines: Seq[String]): String = {
+      val p = dir.resolve(name)
+      Files.write(p, (header.mkString(",") +: lines).mkString("", "\n", "\n")
+        .getBytes(StandardCharsets.UTF_8))
+      p.toString
+    }
+    Feeds(
+      csv("drivers.csv", DriversHeader, knownDrivers ++ newDrivers),
+      csv("vehicle_fuel_consumptions.csv", CarsHeader, knownCars ++ newCars),
+      csv("drivers_logbook.csv", LogbookHeader, rows(base.logbook).take(5) ++ newTrips),
+      s"second-day feeds over ${base.source} under $dir")
+  }
+
+  // what the second day appends over the first load
+  val DayTwoDrivers = 5
+  val DayTwoCars = 3
+  val DayTwoTrips = 30
+  val DayTwoCities = 4 // Uusikaupunki 0-2 and Stockholm
+
   // ------------------------------------------------------------ generation
 
   private val BrandNames = IndexedSeq("ACURA", "ALFA ROMEO", "ASTON MARTIN",

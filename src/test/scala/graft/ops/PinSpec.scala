@@ -98,6 +98,19 @@ class PinSpec extends SparkSpec {
     assert(cause.getMessage.contains("boom"))
   }
 
+  test("withPin: hands over the pin and its values, then drops the checkpoint's blocks") {
+    val df = rows(0, 50).repartition(2)
+    val (ids, n) = RelationalOps.withPin(df, count(lit(1))) { (pinned, obs) =>
+      val ids = pinned.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }
+      assert(ids.nonEmpty && ids.forall(spark.sparkContext.getPersistentRDDs.contains))
+      (ids, pinned.count() + obs.getLong(0))
+    }
+    assert(n == 100L)
+    assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains))
+  }
+
   // Exact job counts of the operations that pin a churn-sized frame
   // and read values from it: a probe that re-read the pinned frame
   // would cost two more jobs under AQE, and a count that moves means

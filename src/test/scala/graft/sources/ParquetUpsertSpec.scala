@@ -28,6 +28,42 @@ class ParquetUpsertSpec extends SparkSpec {
     assert(parent == Seq("t"), s"leftovers: $parent")
   }
 
+  test("mergeByKey: an empty batch over an existing table returns the table's count") {
+    val dir = Files.createTempDirectory("graft_upsert_empty").toString + "/t"
+    val v1 = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)).toDF("id", "name", "v")
+    ParquetUpsert.mergeByKey(spark, dir, v1, Seq("id"))
+    assert(ParquetUpsert.mergeByKey(spark, dir, v1.limit(0), Seq("id")) == 3L)
+    assert(spark.read.parquet(dir).count() == 3L)
+  }
+
+  test("mergeByKey: an empty batch on a fresh path returns 0") {
+    val dir = Files.createTempDirectory("graft_upsert_fresh").toString + "/t"
+    val none = Seq.empty[(Long, String, Double)].toDF("id", "name", "v")
+    assert(ParquetUpsert.mergeByKey(spark, dir, none, Seq("id")) == 0L)
+    assert(spark.read.parquet(dir).isEmpty)
+  }
+
+  test("mergeByKey: a failing write rethrows and never waits on its count") {
+    val dir = Files.createTempDirectory("graft_upsert_boom").toString + "/t"
+    ParquetUpsert.mergeByKey(spark, dir, Seq((1L, "a", 1.0)).toDF("id", "name", "v"), Seq("id"))
+    val boom = udf((k: Long) =>
+      if (k == 7L) throw new IllegalStateException("boom") else k)
+    val batch = spark.range(0, 20).select(boom(col("id")).as("id"),
+      lit("x").as("name"), lit(2.0).as("v"))
+    val run = scala.concurrent.Future(ParquetUpsert.mergeByKey(spark, dir, batch, Seq("id")))(
+      scala.concurrent.ExecutionContext.global)
+    val thrown = scala.util.Try(scala.concurrent.Await.result(run,
+      scala.concurrent.duration.Duration(120, "s")))
+    assert(thrown.isFailure)
+    assert(!thrown.failed.get.isInstanceOf[java.util.concurrent.TimeoutException])
+    var cause: Throwable = thrown.failed.get
+    while (cause.getCause != null && !cause.getMessage.contains("boom"))
+      cause = cause.getCause
+    assert(cause.getMessage.contains("boom"))
+    // the live table is untouched
+    assert(spark.read.parquet(dir).count() == 1L)
+  }
+
   test("staged partitioned append: accumulates batches, partition layout, no leftovers") {
     val wh = Files.createTempDirectory("graft_store").toString
     val store = new ParquetStore(spark, wh)
