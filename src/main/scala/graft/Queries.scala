@@ -214,8 +214,8 @@ object Queries {
 
   /** FK/orphan-key validation (WarehouseQa — SURVEY §7.3, reference
     * create_tables.py FK set): orphan-row count per declared FK across
-    * the warehouse star schema, one scan + broadcast key joins per
-    * child table. The "probe:" row points lineitem.l_orderkey at
+    * the warehouse star schema, one aggregation over one scan of each
+    * table, with no join. The "probe:" row points lineitem.l_orderkey at
     * nation's 25-key set — a deliberately mismatched check whose large
     * deterministic count pins the counting logic (the real FKs are all
     * 0 on the clean synthetic data, which would hash-match even if
@@ -225,19 +225,16 @@ object Queries {
     import graft.etl.WarehouseQa._
     val li = t(s, dir, "lineitem"); val ord = t(s, dir, "orders")
     val cust = t(s, dir, "customer"); val nat = t(s, dir, "nation")
-    orphanCounts(li, Seq(
-      Fk("lineitem.l_orderkey->orders", "l_orderkey", ord, "o_orderkey"),
-      Fk("lineitem.l_partkey->part", "l_partkey", t(s, dir, "part"), "p_partkey"),
-      Fk("lineitem.l_suppkey->supplier", "l_suppkey", t(s, dir, "supplier"), "s_suppkey"),
-      Fk("probe:lineitem.l_orderkey->nation", "l_orderkey", nat, "n_nationkey")))
-      .unionByName(orphanCounts(ord, Seq(
-        Fk("orders.o_custkey->customer", "o_custkey", cust, "c_custkey"))))
-      .unionByName(orphanCounts(cust, Seq(
-        Fk("customer.c_nationkey->nation", "c_nationkey", nat, "n_nationkey"))))
-      .unionByName(orphanCounts(nat, Seq(
-        Fk("nation.n_regionkey->region", "n_regionkey", t(s, dir, "region"), "r_regionkey"))))
-      .unionByName(orphanCounts(t(s, dir, "events"), Seq(
-        Fk("events.user_id->customer", "user_id", cust, "c_custkey"))))
+    orphanCounts(Seq(
+      li -> Seq(
+        Fk("lineitem.l_orderkey->orders", "l_orderkey", ord, "o_orderkey"),
+        Fk("lineitem.l_partkey->part", "l_partkey", t(s, dir, "part"), "p_partkey"),
+        Fk("lineitem.l_suppkey->supplier", "l_suppkey", t(s, dir, "supplier"), "s_suppkey"),
+        Fk("probe:lineitem.l_orderkey->nation", "l_orderkey", nat, "n_nationkey")),
+      ord -> Seq(Fk("orders.o_custkey->customer", "o_custkey", cust, "c_custkey")),
+      cust -> Seq(Fk("customer.c_nationkey->nation", "c_nationkey", nat, "n_nationkey")),
+      nat -> Seq(Fk("nation.n_regionkey->region", "n_regionkey", t(s, dir, "region"), "r_regionkey")),
+      t(s, dir, "events") -> Seq(Fk("events.user_id->customer", "user_id", cust, "c_custkey"))))
   }
 
   /** J9/J10 + A4 — the star-schema rollup (lineitem→orders→customer→

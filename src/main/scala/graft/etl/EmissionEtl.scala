@@ -53,15 +53,23 @@ class EmissionEtl(
   private def append(df: DataFrame, name: String, key: String): Unit =
     store.appendKeyed(df, name, key)
 
-  /** Materialize a small dim batch once (persist → use → unpersist):
-    * the count probe and the staged merge's two references to the
-    * updates plan would otherwise re-run the full anti-join + max-key
-    * lineage once per action.
+  /** Pin a keyed dim batch once, its row count observed in the
+    * checkpoint's own job, and append it when it holds any row: the
+    * staged merge's two references to the batch read the pin instead
+    * of re-running the anti-join + key-assignment lineage.
     */
-  private def withCached[T](df: DataFrame)(f: DataFrame => T): T = {
-    val cached = df.persist()
-    try f(cached) finally cached.unpersist()
-  }
+  private def appendNovel(keyed: DataFrame, name: String, key: String): Long =
+    withPin(keyed, count(lit(1))) { (k, seen) =>
+      val n = seen.getLong(0)
+      if (n > 0) append(k, name, key)
+      n
+    }
+
+  /** The live table, when there is one: the key assignment continues
+    * from its key max.
+    */
+  private def live(name: String): Option[DataFrame] =
+    if (tableExists(name)) Some(readTable(name)) else None
 
   // ---------------------------------------------------------------- extract
 
@@ -103,22 +111,13 @@ class EmissionEtl(
       feed.select("name", "first_name"),
       Seq("name", "first_name"),
       Seq(col("name")))
-    val novel =
-      if (!tableExists("drivers")) clean
-      else antiJoinNew(clean, readTable("drivers"), Seq("name", "first_name"),
-        broadcastRight = true)
-    val existingMax =
-      if (!tableExists("drivers")) 0L
-      else readTable("drivers").agg(coalesce(max(col("driver_id")).cast("long"), lit(0L))).head.getLong(0)
-    val keyed = withSurrogateKey(
-      novel, "driver_id", Seq(col("name"), col("first_name")), existingMax)
-      .select("driver_id", "name", "first_name")
-    val n = withCached(keyed) { k =>
-      val n = k.count()
-      if (n > 0) append(k, "drivers", "driver_id")
-      n
-    }
-    n
+    val table = live("drivers")
+    val novel = table.fold(clean)(
+      antiJoinNew(clean, _, Seq("name", "first_name"), broadcastRight = true))
+    appendNovel(
+      withSurrogateKey(novel, "driver_id", Seq(col("name"), col("first_name")), table)
+        .select("driver_id", "name", "first_name"),
+      "drivers", "driver_id")
   }
 
   /** Cars dim: rename raw headers, sort by brand, dedup on the 7-col
@@ -132,19 +131,12 @@ class EmissionEtl(
       Schemas.carsDedupKey,
       Seq(col("brand")))
     val all12 = Schemas.carsRename.values.toSeq
-    val novel =
-      if (!tableExists("cars")) clean
-      else antiJoinNew(clean, readTable("cars"), all12, broadcastRight = true)
-    val existingMax =
-      if (!tableExists("cars")) 0L
-      else readTable("cars").agg(coalesce(max(col("car_id")).cast("long"), lit(0L))).head.getLong(0)
-    val keyed = withSurrogateKey(novel, "car_id", Seq(col("brand"), col("model")), existingMax)
-    val n = withCached(keyed.select((Seq("car_id") ++ carCols).map(col): _*)) { k =>
-      val n = k.count()
-      if (n > 0) append(k, "cars", "car_id")
-      n
-    }
-    n
+    val table = live("cars")
+    val novel = table.fold(clean)(antiJoinNew(clean, _, all12, broadcastRight = true))
+    appendNovel(
+      withSurrogateKey(novel, "car_id", Seq(col("brand"), col("model")), table)
+        .select((Seq("car_id") ++ carCols).map(col): _*),
+      "cars", "car_id")
   }
 
   /** Country dim from logbook start+target countries
@@ -158,21 +150,13 @@ class EmissionEtl(
     val incoming =
       if (strictCompat && tableExists("country")) start.distinct()
       else unionDistinct(start, target)
-    val novel =
-      if (!tableExists("country")) incoming
-      else antiJoinNew(incoming, readTable("country"), Seq("country_name"),
-        broadcastRight = true)
-    val existingMax =
-      if (!tableExists("country")) 0L
-      else readTable("country").agg(coalesce(max(col("country_id")).cast("long"), lit(0L))).head.getLong(0)
-    val keyed = withSurrogateKey(novel, "country_id", Seq(col("country_name")), existingMax)
-      .select("country_id", "country_name")
-    val n = withCached(keyed) { k =>
-      val n = k.count()
-      if (n > 0) append(k, "country", "country_id")
-      n
-    }
-    n
+    val table = live("country")
+    val novel = table.fold(incoming)(
+      antiJoinNew(incoming, _, Seq("country_name"), broadcastRight = true))
+    appendNovel(
+      withSurrogateKey(novel, "country_id", Seq(col("country_name")), table)
+        .select("country_id", "country_name"),
+      "country", "country_id")
   }
 
   /** City dim from logbook start+target cities with their countries
@@ -203,28 +187,22 @@ class EmissionEtl(
     // No country table yet means no logbook row has ever loaded
     // (loadCountries runs first): read it as the reference's empty
     // CREATE TABLE IF NOT EXISTS table, not as a missing path.
-    val novel =
-      if (!tableExists("city"))
+    val table = live("city")
+    val novel = table match {
+      case None =>
         if (tableExists("country")) withCountry
         else incoming.select(col("city_name"), lit(null).cast("int").as("country_id"))
-      else if (strictCompat)
-        antiJoinNew(incoming, readTable("city"), Seq("city_name"),
-          broadcastRight = true)
+      case Some(city) if strictCompat =>
+        antiJoinNew(incoming, city, Seq("city_name"), broadcastRight = true)
           .select(col("city_name"),
             lit(null).cast(Schemas.cityTable("country_id").dataType).as("country_id"))
-      else antiJoinNew(withCountry, readTable("city"), Seq("city_name", "country_id"),
-        broadcastRight = true)
-    val existingMax =
-      if (!tableExists("city")) 0L
-      else readTable("city").agg(coalesce(max(col("city_id")).cast("long"), lit(0L))).head.getLong(0)
-    val keyed = withSurrogateKey(novel, "city_id", Seq(col("city_name")), existingMax)
-      .select("city_id", "city_name", "country_id")
-    val n = withCached(keyed) { k =>
-      val n = k.count()
-      if (n > 0) append(k, "city", "city_id")
-      n
+      case Some(city) =>
+        antiJoinNew(withCountry, city, Seq("city_name", "country_id"), broadcastRight = true)
     }
-    n
+    appendNovel(
+      withSurrogateKey(novel, "city_id", Seq(col("city_name")), table)
+        .select("city_id", "city_name", "country_id"),
+      "city", "city_id")
   }
 
   // ------------------------------------------------------------------ fact

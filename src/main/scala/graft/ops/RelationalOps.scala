@@ -79,23 +79,38 @@ object RelationalOps {
   def unionDistinct(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b).distinct()
 
-  /** Sequential surrogate keys continuing from `existingMax`
-    * (SURVEY §7.4 — Postgres SERIAL replacement). Deterministic given
-    * `ordering` — the reference itself sorts before load (O1/O2), so
-    * key values line up when insertion order matches.
+  /** Sequential surrogate keys continuing from the `live` table's
+    * `keyCol` max, or from 1 without one (SURVEY §7.4 — Postgres
+    * SERIAL replacement). Deterministic given `ordering` — the
+    * reference itself sorts before load (O1/O2), so key values line up
+    * when insertion order matches.
     *
     * Uses a global row_number window (single partition) — acceptable
     * for dimension batches (thousands of rows); the fact table carries
     * no SERIAL. For billion-row key assignment use
-    * `zipWithIndex`-style per-partition offsets instead.
+    * `zipWithIndex`-style per-partition offsets instead. The live
+    * table's key column rides the same window, its rows sorted after
+    * `df`'s, so its max comes out of the numbering pass itself instead
+    * of an aggregate job of its own.
     */
   def withSurrogateKey(
       df: DataFrame,
       keyCol: String,
       ordering: Seq[Column],
-      existingMax: Long = 0L): DataFrame = {
-    val w = Window.orderBy(ordering: _*)
-    df.withColumn(keyCol, (row_number().over(w) + lit(existingMax)).cast("int"))
+      live: Option[DataFrame] = None): DataFrame = live match {
+    case None =>
+      df.withColumn(keyCol, row_number().over(Window.orderBy(ordering: _*)).cast("int"))
+    case Some(table) =>
+      val w = Window.orderBy(col("__live") +: ordering: _*)
+      df.withColumn("__live", lit(false))
+        .unionByName(table.select(lit(true).as("__live"), col(keyCol).as("__live_key")),
+          allowMissingColumns = true)
+        .withColumn(keyCol, (row_number().over(w) + coalesce(
+          max(col("__live_key").cast("long"))
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)),
+          lit(0L))).cast("int"))
+        .filter(!col("__live"))
+        .drop("__live", "__live_key")
   }
 
   /** Backward as-of join — for each left row, the most recent right

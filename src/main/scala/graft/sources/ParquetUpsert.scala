@@ -1,8 +1,12 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.ops.RelationalOps
 
 /** Staged upsert on a parquet table — the Spark realization of the
@@ -23,7 +27,9 @@ import graft.ops.RelationalOps
   *
   * Returns the merged table's row count, observed while the stage is
   * written (an [[Observation]] on the write), so no job re-reads the
-  * stage to count it.
+  * stage to count it. The live table is read with the schema Spark
+  * would infer for it, taken from one data file's footer on the
+  * driver ([[footerSchema]]) instead of in an inference job.
   */
 object ParquetUpsert {
 
@@ -39,7 +45,7 @@ object ParquetUpsert {
 
     val merged =
       if (fs.exists(target)) {
-        val existing = spark.read.parquet(tablePath)
+        val existing = spark.read.schema(footerSchema(spark, fs, target)).parquet(tablePath)
         RelationalOps.antiJoinNew(existing, updates, keys)
           .unionByName(updates.select(existing.columns.map(col): _*))
       } else updates
@@ -62,5 +68,28 @@ object ParquetUpsert {
     }
     fs.delete(old, true)
     n
+  }
+
+  /** The schema `spark.read.parquet(dir)` infers with `mergeSchema`
+    * off, read on the driver: the first data file's footer, its Spark
+    * row metadata (the schema the writing session declared) when
+    * present, else its parquet schema converted. Every file of a
+    * table this object publishes comes from one write, so any one
+    * footer speaks for all. The schema keeps every live column: a
+    * batch that lacks one is still refused by the merge's select.
+    */
+  private def footerSchema(spark: SparkSession, fs: FileSystem, dir: Path): StructType = {
+    val file = fs.listStatus(dir)
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.getName).headOption
+      .getOrElse(throw new java.io.IOException(s"no parquet data file under $dir"))
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+    } finally reader.close()
   }
 }

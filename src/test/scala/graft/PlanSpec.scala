@@ -215,10 +215,10 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ReadSchema: struct<l_extendedprice:double>"), p)
   }
 
-  test("q_fk_orphans: every FK check is a broadcast join, no sort-merge") {
+  test("q_fk_orphans: every FK check folds into one aggregation, no join") {
     val p = plan("q_fk_orphans")
     assert(!p.contains("SortMergeJoin"), p)
-    assert("BroadcastHashJoin".r.findAllIn(p).length >= 8, p) // one per FK
+    assert(!p.contains("Join"), p)
   }
 
   test("q_dq_report: six rules, ONE scan of orders") {

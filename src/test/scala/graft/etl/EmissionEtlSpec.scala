@@ -58,6 +58,96 @@ class EmissionEtlSpec extends SparkSpec {
     assert(out(0).getAs[Long]("orphan_rows") == 1L) // only the 99; NULL not an orphan
   }
 
+  /** Orphans of `childCol` by a direct left-anti join on `===`. */
+  private def antiJoinOrphans(
+      child: org.apache.spark.sql.DataFrame, childCol: String,
+      parent: org.apache.spark.sql.DataFrame, parentKey: String): Long =
+    child.filter(col(childCol).isNotNull).alias("c")
+      .join(parent.alias("p"), col(s"c.$childCol") === col(s"p.$parentKey"), "left_anti")
+      .count()
+
+  private def report(out: Array[org.apache.spark.sql.Row]): Seq[(String, Any)] =
+    out.toSeq.map(r => r.getString(0) -> (if (r.isNullAt(1)) null else r.getLong(1)))
+
+  test("FK validation: string keys, mixed key types, duplicate parent keys") {
+    import spark.implicits._
+    val child = Seq[(Option[String], Option[Int], Option[Long])](
+      (Some("a"), Some(10), Some(10L)), (Some("b"), Some(10), Some(99L)),
+      (Some("zz"), Some(12), None), (None, None, Some(11L)), (Some("zz"), Some(13), Some(11L)))
+      .toDF("s", "i", "l")
+    // every parent key appears twice: a child row still counts once
+    val parent = Seq(("a", 10L, "10"), ("a", 10L, "10"), ("b", 11L, "011"), ("b", 11L, "011"))
+      .toDF("ks", "kl", "kstr")
+    val fks = Seq(
+      WarehouseQa.Fk("s->ks", "s", parent, "ks"),
+      WarehouseQa.Fk("i->kl (int vs long)", "i", parent, "kl"),
+      WarehouseQa.Fk("l->kstr (long vs string)", "l", parent, "kstr"))
+    val out = report(WarehouseQa.orphanCounts(child, fks).collect())
+    assert(out == Seq("s->ks" -> 2L, "i->kl (int vs long)" -> 2L,
+      "l->kstr (long vs string)" -> 1L), out)
+    // each equals a direct left-anti join on the same `===`
+    assert(out.map(_._2) == fks.map(fk => antiJoinOrphans(child, fk.childCol, parent, fk.parentKey)))
+  }
+
+  test("FK validation: NULL child keys never count, an empty child reports one row") {
+    import spark.implicits._
+    val parent = Seq(1, 2).toDF("k")
+    val nulls = Seq[Option[Int]](None, None, Some(3)).toDF("ref")
+    val empty = nulls.filter(lit(false))
+    val out = report(WarehouseQa.orphanCounts(Seq(
+      nulls -> Seq(WarehouseQa.Fk("nulls", "ref", parent, "k")),
+      empty -> Seq(WarehouseQa.Fk("empty", "ref", parent, "k")))).collect())
+    // an empty child sums no rows: NULL, as the per-child aggregate gives
+    assert(out == Seq("nulls" -> 1L, "empty" -> null), out)
+    assert(report(WarehouseQa.orphanCounts(empty,
+      Seq(WarehouseQa.Fk("empty", "ref", parent, "k"))).collect()) == Seq("empty" -> null))
+  }
+
+  test("FK validation: one frame as both child and parent, one call for several children") {
+    import spark.implicits._
+    // a self-referencing table: node.parent_id -> node.id
+    val node = Seq((1, Option.empty[Int]), (2, Some(1)), (3, Some(7)), (4, Some(3)), (5, Some(8)))
+      .toDF("id", "parent_id")
+    val edge = Seq((1, 2), (3, 9), (6, 6)).toDF("src", "dst")
+    val checks = Seq(
+      node -> Seq(WarehouseQa.Fk("node.parent_id->node", "parent_id", node, "id")),
+      edge -> Seq(
+        WarehouseQa.Fk("edge.src->node", "src", node, "id"),
+        WarehouseQa.Fk("edge.dst->node", "dst", node, "id")))
+    val together = report(WarehouseQa.orphanCounts(checks).collect())
+    assert(together == Seq("node.parent_id->node" -> 2L, "edge.src->node" -> 1L,
+      "edge.dst->node" -> 2L), together)
+    val apart = checks.flatMap { case (c, fks) => report(WarehouseQa.orphanCounts(c, fks).collect()) }
+    assert(together == apart)
+    // the shared frame is scanned once
+    val plan = WarehouseQa.orphanCounts(checks).queryExecution.executedPlan.toString
+    assert("Scan ExistingRDD|LocalTableScan".r.findAllIn(plan).length == 2, plan)
+    assert(!plan.contains("Join"), plan)
+  }
+
+  test("surrogate keys: after a second day every dimension's keys are unique, dense, continued") {
+    val dir = Files.createTempDirectory("graft_wh_keys").toString
+    val gen = ReferenceFeeds.generated
+    new EmissionEtl(spark, dir).run(gen.drivers, gen.cars, gen.logbook)
+    val dims = Seq("drivers" -> "driver_id", "cars" -> "car_id", "country" -> "country_id",
+      "city" -> "city_id")
+    def rows(etl: EmissionEtl, t: String) = etl.readTable(t).collect().toSet
+    val day1 = { val e = new EmissionEtl(spark, dir); dims.map { case (t, _) => t -> rows(e, t) }.toMap }
+    val two = ReferenceFeeds.secondDay
+    val etl = new EmissionEtl(spark, dir)
+    val added = etl.run(two.drivers, two.cars, two.logbook)
+    dims.foreach { case (t, key) =>
+      val ids = etl.readTable(t).select(key).collect().map(_.getInt(0)).toSeq
+      val before = day1(t).size
+      assert(added(t) > 0L, s"$t: the second day adds rows")
+      assert(ids.sorted == (1 to before + added(t).toInt), s"$t: keys not unique and dense")
+      // day-one rows keep their keys; the new rows take the keys after day one's max
+      val now = rows(etl, t)
+      assert(day1(t).subsetOf(now), t)
+      assert((now -- day1(t)).map(_.getAs[Int](key)) == (before + 1 to before + added(t).toInt).toSet, t)
+    }
+  }
+
   test("total_emission = distance_km * co2 (spot check)") {
     firstRun
     val bad = etl.readTable("car_driver_log")

@@ -8,9 +8,11 @@ import graft.SparkSpec
   * pipeline as a daily scheduler builds it: a first load of the
   * generated reference-shaped feeds, a second day onto that warehouse,
   * and a re-delivery of the second day. A count that moves means a
-  * load's plan moved. Every job runs inside a SQL execution except the
-  * schema inference of `ParquetUpsert.mergeByKey`'s read of the live
-  * dimension table: every warehouse read carries its declared schema.
+  * load's plan moved. Every job runs inside a SQL execution: every
+  * warehouse read carries its declared schema, and
+  * `ParquetUpsert.mergeByKey` takes the live table's from a footer on
+  * the driver. The orphan report over the loaded warehouse is counted
+  * the same way.
   */
 class EtlJobsSpec extends SparkSpec {
 
@@ -23,9 +25,8 @@ class EtlJobsSpec extends SparkSpec {
   private lazy val second = { first; load(ReferenceFeeds.secondDay) }
   private lazy val redelivery = { second; load(ReferenceFeeds.secondDay) }
 
-  /** Jobs that ran outside a SQL execution, bar the live-table read. */
-  private def inferring(jobs: Seq[SparkSpec.Job]): Seq[SparkSpec.Job] =
-    jobs.filter(j => !j.inSql && !j.callSite.contains("ParquetUpsert.scala"))
+  /** Jobs that ran outside a SQL execution. */
+  private def inferring(jobs: Seq[SparkSpec.Job]): Seq[SparkSpec.Job] = jobs.filterNot(_.inSql)
 
   test("jobs: a first load of the reference-shaped feeds") {
     val (counts, jobs) = first
@@ -53,7 +54,17 @@ class EtlJobsSpec extends SparkSpec {
     assert(jobs.size == RedeliveryJobs, jobs.mkString("\n"))
   }
 
-  private val FirstLoadJobs = 31
-  private val SecondDayJobs = 52
-  private val RedeliveryJobs = 38
+  test("jobs: the orphan report over the second day's warehouse") {
+    second
+    val (report, jobs) = jobListOf(
+      WarehouseQa.emissionOrphanReport(new EmissionEtl(spark, wh)).collect())
+    assert(report.length == 8 && report.forall(_.getLong(1) == 0L), report.mkString(", "))
+    assert(inferring(jobs).isEmpty, jobs.mkString("\n"))
+    assert(jobs.size == OrphanReportJobs, jobs.mkString("\n"))
+  }
+
+  private val FirstLoadJobs = 27
+  private val SecondDayJobs = 36
+  private val RedeliveryJobs = 27
+  private val OrphanReportJobs = 3
 }

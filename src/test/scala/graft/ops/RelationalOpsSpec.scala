@@ -36,9 +36,10 @@ class RelationalOpsSpec extends SparkSpec {
     assert(out.map(_.getString(2)).toSeq == Seq("first", "only"))
   }
 
-  test("withSurrogateKey continues from existingMax, deterministic order") {
+  test("withSurrogateKey continues from the live table's max, deterministic order") {
     val df = Seq("b", "a", "c").toDF("name")
-    val keyed = withSurrogateKey(df, "id", Seq(col("name")), existingMax = 10)
+    val live = Seq((10, "x"), (3, "y")).toDF("id", "name")
+    val keyed = withSurrogateKey(df, "id", Seq(col("name")), Some(live))
       .orderBy("id").collect()
     assert(keyed.map(r => (r.getInt(1), r.getString(0))).toSeq ==
       Seq((11, "a"), (12, "b"), (13, "c")))

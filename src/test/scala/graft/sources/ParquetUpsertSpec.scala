@@ -43,6 +43,31 @@ class ParquetUpsertSpec extends SparkSpec {
     assert(spark.read.parquet(dir).isEmpty)
   }
 
+  test("mergeByKey: the live schema comes from a footer, every job inside a SQL execution") {
+    val dir = Files.createTempDirectory("graft_upsert_footer").toString + "/t"
+    val v1 = Seq((1L, "a", BigDecimal("1.25"), java.sql.Date.valueOf("2024-01-02")))
+      .toDF("id", "name", "amount", "day")
+    ParquetUpsert.mergeByKey(spark, dir, v1, Seq("id"))
+    val inferred = spark.read.parquet(dir).schema
+    val v2 = Seq((2L, "b", BigDecimal("2.50"), java.sql.Date.valueOf("2024-01-03")))
+      .toDF("id", "name", "amount", "day")
+    val (n, jobs) = jobListOf(ParquetUpsert.mergeByKey(spark, dir, v2, Seq("id")))
+    assert(n == 2L)
+    assert(jobs.forall(_.inSql), jobs.mkString("\n"))
+    assert(spark.read.parquet(dir).schema == inferred)
+    assert(spark.read.parquet(dir).orderBy("id").collect().map(_.getString(1)).toSeq == Seq("a", "b"))
+  }
+
+  test("mergeByKey: a batch missing a live column is refused, the table untouched") {
+    val dir = Files.createTempDirectory("graft_upsert_narrow").toString + "/t"
+    ParquetUpsert.mergeByKey(spark, dir,
+      Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id", "name", "v"), Seq("id"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      ParquetUpsert.mergeByKey(spark, dir, Seq((3L, "c")).toDF("id", "name"), Seq("id")))
+    assert(spark.read.parquet(dir).count() == 2L)
+    assert(spark.read.parquet(dir).columns.toSeq == Seq("id", "name", "v"))
+  }
+
   test("mergeByKey: a failing write rethrows and never waits on its count") {
     val dir = Files.createTempDirectory("graft_upsert_boom").toString + "/t"
     ParquetUpsert.mergeByKey(spark, dir, Seq((1L, "a", 1.0)).toDF("id", "name", "v"), Seq("id"))
