@@ -36,7 +36,7 @@ class RelationalOpsSpec extends SparkSpec {
     assert(out.map(_.getString(2)).toSeq == Seq("first", "only"))
   }
 
-  test("withSurrogateKey continues from the live table's max, deterministic order") {
+  test("withSurrogateKey continues from existingMax, deterministic order") {
     val df = Seq("b", "a", "c").toDF("name")
     val live = Seq((10, "x"), (3, "y")).toDF("id", "name")
     val keyed = withSurrogateKey(df, "id", Seq(col("name")), Some(live))
